@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.io.TableIO
-
 /** Connected components (north-rule kernel #2), two interchangeable
   * algorithms over the undirected (symmetrized) edge table:
   *
@@ -18,7 +16,8 @@ import graft.io.TableIO
   *    scale path for 10^12-vertex web graphs.
   *
   * Both return `(vid LONG, component LONG)` with component = min member vid
-  * (deterministic), and checkpoint per-superstep state via [[TableIO]].
+  * (deterministic); [[hashMin]] checkpoints per-superstep state via
+  * [[graft.io.TableIO]].
   * The reference consumes CC semantics through its DBSCAN community
   * expansion (CitationGraphs.go:2873) — ε-threshold similarity graph
   * components; this kernel is that expansion made distributed.
@@ -44,21 +43,48 @@ object ConnectedComponents {
     canon.union(canon.select(col("dst").as("src"), col("src").as("dst")))
   }
 
-  /** @param checkpointEvery TableIO commit cadence in supersteps (with
-    *                        checkpointTable set): an executor loss costs at
-    *                        most `checkpointEvery` supersteps of recompute —
-    *                        `localCheckpoint` blocks are executor-local and
-    *                        die with the executor, so long runs on a real
-    *                        cluster need a reliable-commit cadence. Commits
-    *                        land on the first block boundary at or past each
-    *                        cadence multiple, plus always at convergence.
-    * @param stepsPerJob     supersteps chained lazily per Spark job (the
-    *                        PageRank block-fusion cadence): amortizes the
-    *                        per-job fixed cost k-fold; safe because min
-    *                        propagation is monotone — a block that changes
-    *                        nothing proves the fixpoint was already reached,
-    *                        so block-granular convergence stops at the same
-    *                        labels as step-granular.
+  /** The undirected layout [[hashMin]] and [[LabelPropagation]] iterate
+    * over: `vertices (vid)` and `edges (src, dst)`, the symmetric non-loop
+    * edges plus ONE self-loop per vertex, all persisted.
+    *
+    * ONE scan of the input feeds the whole setup: the canonical (min,max)
+    * edge rows — INCLUDING self-loop rows, so the vertex universe keeps
+    * loop-only vertices (referee-pinned r5 fix) — are deduped once and
+    * persisted; both the vertex universe and the symmetrized table derive
+    * from that cache, and the canonical dedup shuffles |E| rows instead of
+    * the 2|E| a mirror-then-distinct would (guide §2.3/§2.4). The edges end
+    * in repartition(src) + sortWithinPartitions (CSR blocks): distinct's
+    * (src,dst) hash partitioning does NOT satisfy the per-iteration join's
+    * clustering on src. The self-loops feed each vertex its own state
+    * through the same aggregate that feeds it the neighbors' (single-use
+    * state — see [[hashMin]]), at +|V| rows on 2|E|. Genuine self-edges are
+    * dropped, so `src = dst` identifies the added loops exactly. */
+  private[graph] final class Undirected(input: DataFrame) {
+    private val canon = input
+      .select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst"))
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val vertices: DataFrame = canon.select(col("src").as("vid"))
+      .union(canon.select(col("dst").as("vid"))).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    private val sym0 = canon.where(col("src") =!= col("dst"))
+    val edges: DataFrame = sym0
+      .union(sym0.select(col("dst").as("src"), col("src").as("dst")))
+      .union(vertices.select(col("vid").as("src"), col("vid").as("dst")))
+      .repartition(col("src"))
+      .sortWithinPartitions("src", "dst")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+    def unpersist(): Unit = { edges.unpersist(); vertices.unpersist(); canon.unpersist() }
+  }
+
+  /** Runs on the [[Supersteps]] driver (resume, `stepsPerJob` fusion,
+    * `checkpointEvery` cadence, final commit); each manifest also records
+    * the block's `changed` count. Block fusion is safe because min
+    * propagation is monotone — a block that changes nothing proves the
+    * fixpoint was already reached, so block-granular convergence stops at
+    * the same labels as step-granular.
     *
     * Superstep shape: the state frame is consumed exactly ONCE per
     * superstep — the edge table carries an explicit self-loop per vertex,
@@ -68,13 +94,14 @@ object ConnectedComponents {
     * chained step — exponential in the block size). One exchange per
     * superstep: the state arrives partitioned on vid from the previous
     * aggregate, the edge side is cached pre-partitioned on src, and only
-    * the `groupBy(dst)` shuffles. The block-end changed-count rides the
-    * SAME job as the lazy lineage truncation (one action per block, not
-    * two). AQE stays ON (unlike [[PageRank.run]], which must protect a
-    * ReusedExchange and a vertDeg frame co-partitioned across supersteps):
-    * here each superstep's state partitioning is derived fresh, so AQE's
-    * runtime broadcast of a shrunken state side / small-stage coalescing
-    * are pure wins at low scale and no-ops at web scale. */
+    * the `groupBy(dst)` shuffles. The block-end changed-count is the
+    * driver's convergence action, so it materializes the block in the same
+    * job (one action per block, not two). AQE stays ON (unlike
+    * [[PageRank.run]], which must protect a ReusedExchange and a vertDeg
+    * frame co-partitioned across supersteps): here each superstep's state
+    * partitioning is derived fresh, so AQE's runtime broadcast of a
+    * shrunken state side / small-stage coalescing are pure wins at low
+    * scale and no-ops at web scale. */
   def hashMin(
       spark: SparkSession,
       edges: DataFrame,
@@ -82,92 +109,32 @@ object ConnectedComponents {
       checkpointTable: String = null,
       checkpointEvery: Int = 1,
       stepsPerJob: Int = 1): DataFrame = {
-    val ckpt = Option(checkpointTable).filter(_.nonEmpty)
-    // ONE scan of the input feeds the whole setup: the canonical (min,max)
-    // edge rows — INCLUDING self-loop rows, so the vertex universe keeps
-    // loop-only vertices (referee-pinned r5 fix) — are deduped once and
-    // persisted; both the vertex universe and the symmetrized table derive
-    // from that cache. Previously the vertex-endpoint distinct and the
-    // symmetrize each recomputed the full input subtree (two scans +
-    // derivations of a 100 TB edge table); the canonical dedup also
-    // shuffles |E| rows instead of the 2|E| a mirror-then-distinct would
-    // (guide §2.3/§2.4).
-    // The final layout still ends in repartition(src) + sortWithinPartitions
-    // (CSR blocks): distinct's (src,dst) hash partitioning does NOT satisfy
-    // the per-iteration join's clustering on src.
-    // A self-loop per vertex is unioned in BEFORE the layout: it feeds each
-    // vertex its own component through the same aggregate that feeds it the
-    // neighbors' (single-use state — see scaladoc), at +|V| rows on 2|E|.
-    val canon = edges
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val vertices = canon.select(col("src").as("vid"))
-      .union(canon.select(col("dst").as("vid"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sym0 = canon.where(col("src") =!= col("dst"))
-    val sym = sym0
-      .union(sym0.select(col("dst").as("src"), col("src").as("dst")))
-      .union(vertices.select(col("vid").as("src"), col("vid").as("dst")))
-      .repartition(col("src"))
-      .sortWithinPartitions("src", "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val (startStep, start) = ckpt.flatMap(TableIO.read(spark, _)) match {
-      case Some((meta, df)) => (meta.step.toInt + 1, df)
-      case None => (0, vertices.withColumn("component", col("vid")))
-    }
+    val g = new Undirected(edges)
 
     // one chained superstep over (vid, component, prev): candidate = min
     // over in-neighbors ∪ self (the self-loop row); `prev` (the block-start
     // label) rides along on the self-loop row for the block-end
-    // convergence check. Symmetrize drops genuine self-edges, so
-    // src = dst identifies the added loops exactly.
-    def superstep(st: DataFrame): DataFrame = sym
+    // convergence check
+    def superstep(st: DataFrame): DataFrame = g.edges
       .join(st.select(col("vid").as("src"), col("component"), col("prev")), "src")
       .groupBy(col("dst").as("vid"))
       .agg(min(col("component")).as("component"),
         max(when(col("src") === col("dst"), col("prev"))).as("prev"))
 
-    val debug = sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1")
-    val t00 = System.nanoTime()
-    var labels = start.localCheckpoint(true)
-    if (debug) println(f"""{"cc_setup_secs":${(System.nanoTime() - t00) / 1e9}%.3f}""")
-    var step = startStep
-    var changed = 1L
-    val cadence = math.max(1, checkpointEvery)
-    var nextCommitRel = 0L
-    while (step < maxIters && changed > 0) {
-      val tB = System.nanoTime()
-      val block = math.min(math.max(1, stepsPerJob), maxIters - step)
-      var cur = labels.withColumn("prev", col("component"))
-      var i = 0
-      while (i < block) { cur = superstep(cur); i += 1 }
-      // ONE job per block: the LAZY localCheckpoint materializes while the
-      // changed-count scans it (the eager checkpoint + separate count was
-      // two full actions per superstep — the CC fixed-cost regression)
-      val next = cur.localCheckpoint(false)
-      changed = next.where(col("component") =!= col("prev")).count()
-      val endStep = step + block - 1
-      if (debug) println(f"""{"cc_block":{"start":$step,"end":$endStep,"secs":${(System.nanoTime() - tB) / 1e9}%.3f,"changed":$changed}}""")
-      val result = next.select("vid", "component")
-      // commit on the cadence (block-boundary granular), plus always at
-      // convergence / the final step — the final state must land durably
-      // even when the cadence would skip it
-      ckpt.foreach { t =>
-        val endRel = endStep - startStep
-        if (endRel >= nextCommitRel || changed == 0L || endStep >= maxIters - 1) {
-          TableIO.commit(result, t, endStep, Map("changed" -> changed.toDouble))
-          nextCommitRel = (endRel / cadence + 1) * cadence
-        }
-      }
-      labels.unpersist()
-      labels = result
-      step += block
-    }
-    sym.unpersist(); vertices.unpersist(); canon.unpersist()
-    labels
+    try Supersteps.iterate(spark,
+        init = g.vertices.withColumn("component", col("vid")),
+        step = (st, _) => superstep(st),
+        maxIters = maxIters,
+        checkpointTable = checkpointTable,
+        checkpointEvery = checkpointEvery,
+        stepsPerJob = stepsPerJob,
+        snapshot = _.select("vid", "component"),
+        beginBlock = _.withColumn("prev", col("component")),
+        converged = Some { (_, next) =>
+          val changed = next.where(col("component") =!= col("prev")).count()
+          Supersteps.Check(changed == 0L, Map("changed" -> changed.toDouble))
+        }).state
+    finally g.unpersist()
   }
 
   /** Alternating large-star / small-star until the edge set reaches

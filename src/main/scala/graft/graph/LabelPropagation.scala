@@ -3,9 +3,6 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-
-import graft.io.TableIO
 
 /** Synchronous label propagation (north-rule kernel #3).
   *
@@ -21,22 +18,23 @@ import graft.io.TableIO
   * the synchronous propagation fixpoint.
   *
   * The per-vertex mode is computed as `groupBy(vid, label)` vote counts
-  * (self-loops vote with weight 0 — see the layout comment) followed by a
+  * (self-loops vote with weight 0 — see [[run]]) followed by a
   * `row_number` window ordered `(count DESC, label ASC)`; no driver-side
   * state, no join-back to the state frame. AQE stays on — see
   * [[ConnectedComponents.hashMin]].
   */
 object LabelPropagation {
 
-  /** @param checkpointEvery TableIO commit cadence in supersteps (with
-    *                        checkpointTable set) — see
-    *                        [[ConnectedComponents.hashMin]]. The final
-    *                        superstep always commits.
-    * @param stepsPerJob     supersteps chained lazily per Spark job (the
-    *                        PageRank block-fusion cadence) — amortizes the
-    *                        per-job fixed cost (job scheduling + the |V|-row
-    *                        state materialization) k-fold; the fixed
-    *                        iteration count makes fusion trajectory-exact. */
+  /** Runs on the [[Supersteps]] driver (resume, `stepsPerJob` fusion,
+    * `checkpointEvery` cadence, final commit); the fixed iteration count
+    * makes fusion trajectory-exact. Iterates over the shared
+    * [[ConnectedComponents.Undirected]] layout: its self-loop per vertex
+    * delivers each vertex its own label with vote weight 0 through the
+    * SAME aggregate that counts the neighbors' votes, so the state frame is
+    * consumed exactly once per superstep and lazy block fusion never
+    * duplicates the chained subplan (see [[ConnectedComponents.hashMin]]).
+    * The vertex universe keeps vertices whose only edges are self-loops:
+    * each keeps its own label via its weight-0 self-loop vote. */
   def run(
       spark: SparkSession,
       edges: DataFrame,
@@ -44,76 +42,27 @@ object LabelPropagation {
       seedLabels: DataFrame = null, // (vid, label); default = vid
       checkpointTable: String = null,
       checkpointEvery: Int = 1,
-      stepsPerJob: Int = 1): DataFrame =
-    runInternal(spark, edges, numIters, seedLabels, ckptOpt = checkpointTable,
-      checkpointEvery = checkpointEvery, stepsPerJob = stepsPerJob)
-
-  private def runInternal(
-      spark: SparkSession,
-      edges: DataFrame,
-      numIters: Int,
-      seedLabels: DataFrame,
-      ckptOpt: String,
-      checkpointEvery: Int,
-      stepsPerJob: Int): DataFrame = {
-    val ckpt = Option(ckptOpt).filter(_.nonEmpty)
-    // src-partition + sort ONCE before caching (CSR layout): distinct()'s
-    // (src,dst) hash partitioning would force a full edge re-shuffle in
-    // every iteration's join on src. A flagged self-loop per vertex rides
-    // in the same cached table: it delivers each vertex its own label with
-    // vote weight 0 through the SAME aggregate that counts the neighbors'
-    // votes — the state frame is consumed exactly once per superstep, so
-    // lazy block fusion (stepsPerJob) never duplicates the chained subplan
-    // (see [[ConnectedComponents.hashMin]]).
-    // The vertex universe comes from the RAW edge endpoints, not the
-    // symmetrized table: symmetrize drops self-loops, so a vertex whose
-    // only incident edges are self-loops would otherwise vanish from the
-    // output (it keeps its own label via the vote-weight-0 self-loop row).
-    // ONE scan of the input feeds the setup (same shape as hashMin): the
-    // canonical (min,max) edge rows — self-loop rows included, so
-    // loop-only vertices stay in the universe — deduped once, persisted,
-    // and consumed by both the vertex universe and the symmetrized table.
-    val canon = edges
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val vertices = canon.select(col("src").as("vid"))
-      .union(canon.select(col("dst").as("vid"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sym0 = canon.where(col("src") =!= col("dst"))
-    val sym = sym0
-      .union(sym0.select(col("dst").as("src"), col("src").as("dst")))
-      .select(col("src"), col("dst"), lit(0).as("self"))
-      .union(vertices.select(col("vid").as("src"), col("vid").as("dst"),
-        lit(1).as("self")))
-      .repartition(col("src"))
-      .sortWithinPartitions("src", "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      stepsPerJob: Int = 1): DataFrame = {
+    val g = new ConnectedComponents.Undirected(edges)
 
     // seeds are aligned to the graph's vertex set: unlabeled vertices start
     // at their own vid, seed rows for vids outside the graph are dropped
     // (the propagation domain is the graph)
-    val init = Option(seedLabels)
-      .map(s => vertices
+    def init: DataFrame = Option(seedLabels)
+      .map(s => g.vertices
         .join(s.select(col("vid"), col("label").as("seed")), Seq("vid"), "left")
         .select(col("vid"), coalesce(col("seed"), col("vid")).as("label")))
-      .getOrElse(vertices.withColumn("label", col("vid")))
-
-    val (startStep, start) = ckpt.flatMap(TableIO.read(spark, _)) match {
-      case Some((meta, df)) => (meta.step.toInt + 1, df)
-      case None => (0, init)
-    }
+      .getOrElse(g.vertices.withColumn("label", col("vid")))
 
     // one chained superstep: each vertex adopts its in-neighbors' modal
     // label (ties to the minimum), keeps its own when isolated — the
-    // self-loop contributes the own label at vote weight 0, so it wins
-    // exactly when no labeled in-neighbor exists
+    // self-loop (src = dst) contributes the own label at vote weight 0, so
+    // it wins exactly when no labeled in-neighbor exists
     def superstep(st: DataFrame): DataFrame = {
-      val counts = sym
+      val counts = g.edges
         .join(st.select(col("vid").as("src"), col("label")), "src")
         .groupBy(col("dst").as("vid"), col("label"))
-        .agg(sum(lit(1) - col("self")).as("cnt"))
+        .agg(sum((col("src") =!= col("dst")).cast("int")).as("cnt"))
       val w = Window.partitionBy("vid").orderBy(desc("cnt"), asc("label"))
       counts
         .withColumn("rn", row_number().over(w))
@@ -121,33 +70,8 @@ object LabelPropagation {
         .select(col("vid"), col("label"))
     }
 
-    var labels = start.localCheckpoint(true)
-    var step = startStep
-    val cadence = math.max(1, checkpointEvery)
-    var nextCommitRel = 0L
-    while (step < numIters) {
-      val block = math.min(math.max(1, stepsPerJob), numIters - step)
-      var cur = labels
-      var i = 0
-      while (i < block) { cur = superstep(cur); i += 1 }
-      val next = cur.localCheckpoint(true) // truncate lineage per block
-      val endStep = step + block - 1
-      // commit on the cadence (block-boundary granular) + forced final.
-      // `>=` matches hashMin's condition verbatim (both are equivalent to
-      // `==` here since endStep never exceeds the bound, but the two
-      // loops should not drift — review r5 #10)
-      ckpt.foreach { t =>
-        val endRel = endStep - startStep
-        if (endRel >= nextCommitRel || endStep >= numIters - 1) {
-          TableIO.commit(next, t, endStep, Map.empty)
-          nextCommitRel = (endRel / cadence + 1) * cadence
-        }
-      }
-      labels.unpersist()
-      labels = next
-      step += block
-    }
-    sym.unpersist(); vertices.unpersist(); canon.unpersist()
-    labels
+    try Supersteps.iterate(spark, init, (st, _) => superstep(st), numIters,
+      checkpointTable, checkpointEvery, stepsPerJob).state
+    finally g.unpersist()
   }
 }

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.io.TableIO
-
 /** Distributed PageRank as iterative Dataset joins (north-rule kernel #1).
   *
   * Semantics: standard damped PageRank with dangling-mass redistribution —
@@ -31,28 +29,16 @@ import graft.io.TableIO
   *    inside the 1e-6 gate); `kahan = true` switches to the compensated
   *    [[KahanSum]] aggregator (O(eps) error) at ~25% throughput cost when
   *    stricter reproducibility is wanted.
-  *  - `stepsPerJob = k` chains k supersteps lazily inside ONE Spark job
-  *    before truncating lineage (and checking convergence), amortizing the
-  *    per-job fixed cost — job scheduling, the |V|-row state
-  *    materialization, the convergence aggregate — k-fold. Each chained
-  *    superstep still runs its own contribution shuffle (that IS the
-  *    algorithm); only the driver-side bookkeeping is fused. Convergence
-  *    is then checked every k steps (delta spans the block), the standard
-  *    cadence trade for fixed-point iterations.
-  *  - explicit hub salting ([[saltedContribs]], composable with the loop):
+  *  - supersteps run on the [[Supersteps]] driver: `stepsPerJob` block
+  *    fusion, the convergence check once per block (delta spans the block),
+  *    and `checkpointEvery`-cadence TableIO commits of `(vid, rank)` with
+  *    delta, dangling mass and superstep seconds, resumable mid-iteration.
+  *  - explicit hub salting ([[saltedContribs]], composable with the superstep):
   *    contribution rows into a hot IN-degree dst are pre-split across
   *    `numSalts` sub-keys by src-hash and pre-aggregated per (dst, salt)
   *    before the global per-dst combine, so no single reduce key ever
   *    receives a hub's full in-edge volume (AQE's skew join does not
   *    cover iterative self-joins well — SURVEY.md §4).
-  *  - `checkpointEvery = c` commits `(vid, rank)` + per-partition lineage
-  *    + metrics (delta, dangling mass, superstep seconds) via [[TableIO]]
-  *    every c supersteps (evaluated at block boundaries); [[run]] resumes
-  *    mid-iteration from the latest committed snapshot. c = 1 (default) is
-  *    the north-rule "every superstep" cadence; long fixed-point runs on a
-  *    real cluster raise c so an executor loss costs at most c supersteps
-  *    of recompute instead of the whole run (localCheckpoint blocks are
-  *    executor-local and die with the executor).
   */
 object PageRank {
 
@@ -107,15 +93,10 @@ object PageRank {
     PreparedGraph(e, vertDeg, firstRow.getLong(0), firstRow.getLong(1) > 0L)
   }
 
-  /** @param checkpointTable directory for TableIO superstep snapshots;
+  /** @param checkpointTable TableIO table for superstep snapshots;
     *                        null/empty disables checkpointing.
-    * @param stepsPerJob     supersteps fused per Spark job (lineage
-    *                        truncation + convergence cadence); 1 = classic
-    *                        one-job-per-superstep.
-    * @param checkpointEvery TableIO snapshot cadence in supersteps (only
-    *                        with checkpointTable set); commits land on the
-    *                        first block boundary at or past each multiple.
-    */
+    * `stepsPerJob`, `checkpointEvery` and resume follow the [[Supersteps]]
+    * contract. */
   def run(
       spark: SparkSession,
       edges: DataFrame, // (src LONG, dst LONG), deduped, no self-loops
@@ -174,8 +155,6 @@ object PageRank {
       stepsPerJob: Int,
       checkpointEvery: Int): Result = {
 
-    val ckpt = Option(checkpointTable).filter(_.nonEmpty)
-    val debug = sys.env.get("SPARK_GRAFT_PR_DEBUG").contains("1")
     val e = g.edges
     val vertDeg = g.vertDeg
     val n = g.n
@@ -226,87 +205,47 @@ object PageRank {
       }
     }
 
-    // resume from the latest committed superstep if present: snapshots
-    // store (vid, rank); re-attach outDeg from the cached frame
-    val (startStep, startState) = ckpt.flatMap(TableIO.read(spark, _)) match {
-      case Some((meta, df)) =>
-        (meta.step.toInt + 1,
-          vertDeg.join(df.select(col("vid"), col("rank")), Seq("vid")))
-      case None =>
-        (0, vertDeg.withColumn("rank", lit(1.0 / n)))
+    // the convergence check costs one join+agg per BLOCK; fixed-iteration
+    // runs (tol < 0) skip it. With block > 1 the delta spans the block — a
+    // conservative stop test (per-step deltas only shrink as the iteration
+    // contracts).
+    def deltaCheck(prev: DataFrame, next: DataFrame): Supersteps.Check = {
+      val delta = next
+        .join(prev.select(col("vid"), col("rank").as("prev")), "vid")
+        .agg(max(abs(col("rank") - col("prev")))).head().getDouble(0)
+      Supersteps.Check(delta < tol, Map("delta" -> delta))
     }
 
-    // truncate lineage at block boundaries: without this the logical plan
-    // (and planning time) grows without bound across iterations
-    var st = startState.localCheckpoint(true)
-    var step = startStep
-    var delta = Double.MaxValue
-    var lastCommitted = startStep - 1
+    // metrics-only dangling mass: a cheap scan of the freshly materialized
+    // |V|-row state, paid only by committed blocks
+    def danglingMass(st: DataFrame): Double =
+      if (!hasDanglers) 0.0
+      else st.where(col("outDeg") === 0)
+        .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
 
-    while (step < maxIters && delta >= tol) {
-      val t0 = System.nanoTime()
-      val block = math.min(math.max(1, stepsPerJob), maxIters - step)
-      var cur = st
-      var i = 0
-      while (i < block) { cur = superstep(cur); i += 1 }
-      val newSt = cur.localCheckpoint(true)
-
-      // convergence check costs one extra join+agg per BLOCK; skip it
-      // entirely for fixed-iteration runs (tol < 0). With block > 1 the
-      // delta spans the block — a conservative stop test (per-step deltas
-      // only shrink as the iteration contracts).
-      if (tol >= 0) {
-        delta = newSt
-          .join(st.select(col("vid"), col("rank").as("prev")), "vid")
-          .agg(max(abs(col("rank") - col("prev")))).head().getDouble(0)
-      }
-
-      val secs = (System.nanoTime() - t0) / 1e9
-      val endStep = step + block - 1
-      if (debug)
-        println(f"""{"pr_block":{"start":$step,"end":$endStep,"secs":$secs%.3f}}""")
-      ckpt.foreach { t =>
-        if (endStep - lastCommitted >= math.max(1, checkpointEvery)) {
-          // metrics-only dangling mass: a cheap scan of the freshly
-          // materialized |V|-row state (checkpointed runs pay this 1-job
-          // cost for the lineage record; the hot path above does not)
-          val danglingMass =
-            if (!hasDanglers) 0.0
-            else newSt.where(col("outDeg") === 0)
-              .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
-          TableIO.commit(newSt.select(col("vid"), col("rank")), t, endStep,
-            Map("delta" -> delta, "danglingMass" -> danglingMass,
-              "superstepSecs" -> secs, "vertices" -> n.toDouble,
-              "stepsInBlock" -> block.toDouble))
-          lastCommitted = endStep
-        }
-      }
-      st.unpersist()
-      st = newSt
-      step += block
-    }
-    // a convergence exit (delta < tol) between cadence boundaries must still
-    // commit the final ranks — TableIO readers otherwise see stale state
-    // (mirrors hashMin's always-commit-at-convergence; a maxIters exit keeps
-    // the cadence contract so partial runs resume from the cadence point)
-    ckpt.foreach { t =>
-      if (delta < tol && step - 1 > lastCommitted) {
-        val danglingMass =
-          if (!hasDanglers) 0.0
-          else st.where(col("outDeg") === 0)
-            .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
-        TableIO.commit(st.select(col("vid"), col("rank")), t, step - 1,
-          Map("delta" -> delta, "danglingMass" -> danglingMass,
-            "vertices" -> n.toDouble, "finalCommit" -> 1.0))
-        lastCommitted = step - 1
-      }
-    }
+    val r = Supersteps.iterate(spark,
+      init = vertDeg.withColumn("rank", lit(1.0 / n)),
+      step = (st, _) => superstep(st),
+      maxIters = maxIters,
+      checkpointTable = checkpointTable,
+      checkpointEvery = checkpointEvery,
+      stepsPerJob = stepsPerJob,
+      // snapshots store (vid, rank); outDeg re-attaches from the cached frame
+      resume = snap => vertDeg.join(snap.select(col("vid"), col("rank")), Seq("vid")),
+      snapshot = _.select(col("vid"), col("rank")),
+      converged = if (tol < 0) None else Some(deltaCheck),
+      commitMetrics = st =>
+        Map("danglingMass" -> danglingMass(st), "vertices" -> n.toDouble))
     // NOTE: the prepared graph (e, vertDeg) is NOT unpersisted here — it is
     // owned by the caller ([[run]] unpersists its own; [[runPrepared]]
     // callers reuse it across invocations). The returned ranks are
     // localCheckpoint'd, so they outlive the layout caches.
-    Result(st.select(col("vid"), col("rank")), step, delta)
+    Result(r.state, r.steps, r.metrics.getOrElse("delta", Double.MaxValue))
   }
+
+  /** The salt sub-key for [[saltedContribs]] — a function of `src` so it
+    * varies across a fixed dst's in-edges (spec-asserted). */
+  def saltCol(numSalts: Int): Column = pmod(hash(col("src")), lit(numSalts))
 
   /** Hub-salted variant of one contribution superstep, exposed for the
     * skew-handling path: splits each hot dst's IN-edges into `numSalts`
@@ -315,12 +254,8 @@ object PageRank {
     * fixed dst (hence hash(src), never hash(dst) — a salt that is a pure
     * function of the group key puts every row of the hub in one sub-key
     * and the two-stage defense degenerates to the plain groupBy).
-    * Composable with [[run]]'s loop; used when the degree histogram shows
-    * in-degree skew beyond what map-side combine flattens. */
-  /** The salt sub-key for [[saltedContribs]] — a function of `src` so it
-    * varies across a fixed dst's in-edges (spec-asserted). */
-  def saltCol(numSalts: Int): Column = pmod(hash(col("src")), lit(numSalts))
-
+    * Composable with [[run]]'s superstep; used when the degree histogram
+    * shows in-degree skew beyond what map-side combine flattens. */
   def saltedContribs(e: DataFrame, ranksWithDeg: DataFrame, numSalts: Int): DataFrame = {
     val salted = e.withColumn("salt", saltCol(numSalts))
     salted

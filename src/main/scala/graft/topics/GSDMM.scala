@@ -184,48 +184,39 @@ class GSDMM(
 
   /** @param checkpointTable [[graft.io.TableIO]] table for durable
     *                        per-iteration Gibbs state `(doc, words, nWords,
-    *                        topic)` — `localCheckpoint` blocks are
-    *                        executor-local and die with the executor, so a
-    *                        50-iteration run on a real cluster needs a
-    *                        reliable-commit cadence; a rerun against the
-    *                        same table resumes at the committed iteration
-    *                        with an identical trajectory (the RNG is
-    *                        counter-mode on the absolute iteration).
-    * @param checkpointEvery commit cadence in iterations; the final
-    *                        iteration always commits. */
+    *                        topic)`; resume, cadence (`checkpointEvery`)
+    *                        and the final commit follow the
+    *                        [[graft.graph.Supersteps]] contract. A resumed
+    *                        run has an identical trajectory: the RNG is
+    *                        counter-mode on the absolute iteration. */
   def train(spark: SparkSession, bow: DataFrame, numWords: Int, numIters: Int,
       checkpointTable: String = null, checkpointEvery: Int = 1)
       : GSDMMModel = {
     import spark.implicits._
 
-    val ckpt = Option(checkpointTable).filter(_.nonEmpty)
-    val resumed = ckpt.flatMap(graft.io.TableIO.read(spark, _))
-    val startIter = resumed.map(_._1.step.toInt + 1).getOrElse(0)
-
-    var docs: Dataset[DocRow] = resumed match {
-      case Some((_, df)) =>
-        df.select(col("doc").as("_1"), col("words").as("_2"),
-            col("nWords").as("_3"), col("topic").as("_4"))
-          .as[DocRow].localCheckpoint(true)
-      case None => bow
-        .select(col("doc").cast("long"), col("word").cast("int"), col("cnt").cast("int"))
-        .as[(Long, Int, Int)]
-        .groupByKey(_._1)
-        .mapGroups { (doc, it) =>
-          val ws = it.map(r => (r._2, r._3)).toSeq.sortBy(_._1)
-          (doc, ws, ws.map(_._2).sum,
-            math.floorMod(rngHash(doc, -1), numTopics).toInt)
-        }.localCheckpoint(true)
-    }
-
-    val numDocs = docs.count()
     val useJoin = numWords.toLong * numTopics > broadcastCeiling
     val g = this
-    val k = numTopics; val nw = numWords.toDouble
+    val nw = numWords.toDouble
+
+    def typed(state: DataFrame): Dataset[DocRow] =
+      state.select(col("doc").as("_1"), col("words").as("_2"),
+          col("nWords").as("_3"), col("topic").as("_4"))
+        .as[DocRow]
+
+    def init: DataFrame = bow
+      .select(col("doc").cast("long"), col("word").cast("int"), col("cnt").cast("int"))
+      .as[(Long, Int, Int)]
+      .groupByKey(_._1)
+      .mapGroups { (doc, it) =>
+        val ws = it.map(r => (r._2, r._3)).toSeq.sortBy(_._1)
+        (doc, ws, ws.map(_._2).sum,
+          math.floorMod(rngHash(doc, -1), numTopics).toInt)
+      }.toDF("doc", "words", "nWords", "topic")
 
     // K-sized counters (tiny, always collectible): per-topic doc count and
     // word sum — topicWordSum(k) = Σ nWords over docs assigned to k, so the
-    // K×V table is not needed to derive it
+    // K×V table is not needed to derive it. Every doc has one topic, so the
+    // doc counts also sum to numDocs.
     def smallCounters(ds: Dataset[DocRow]): (Array[Long], Array[Long]) = {
       val tdc = new Array[Long](numTopics)
       val tws = new Array[Long](numTopics)
@@ -237,65 +228,50 @@ class GSDMM(
       (tdc, tws)
     }
 
-    // full counters incl. the K×V word table (broadcast path only)
-    def countersOf(ds: Dataset[DocRow])
-        : (Array[Long], Map[(Int, Int), Long], Array[Long]) = {
-      val (tdc, tws) = smallCounters(ds)
-      val twc = ds.flatMap { case (_, ws, _, kt) => ws.map { case (w, c) => ((kt, w), c.toLong) } }
+    // the K×V word table (broadcast path only)
+    def wordCounts(ds: Dataset[DocRow]): Map[(Int, Int), Long] =
+      ds.flatMap { case (_, ws, _, kt) => ws.map { case (w, c) => ((kt, w), c.toLong) } }
         .groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _).collect().toMap
-      (tdc, twc, tws)
+
+    // one Gibbs superstep; the driver's checkpoint after it is the barrier
+    def resample(state: DataFrame, iter: Int): DataFrame = {
+      val docs = typed(state)
+      val (tdc, tws) = smallCounters(docs)
+      val numDocs = tdc.sum
+      val tdcB = spark.sparkContext.broadcast(tdc)
+      val twsB = spark.sparkContext.broadcast(tws)
+      val next =
+        if (!useJoin) {
+          val twcB = spark.sparkContext.broadcast(wordCounts(docs))
+          docs.map { case (doc, ws, nInDoc, kOld) =>
+            val wi = ws.toIndexedSeq
+            val twc0 = twcB.value
+            val kNew = g.sampleTopic(wi, nInDoc, kOld, doc, iter, tdcB.value,
+              (pos, t) => twc0.getOrElse((t, wi(pos)._1), 0L).toDouble,
+              twsB.value, numDocs, nw)
+            (doc, ws, nInDoc, kNew)
+          }
+        } else
+          withWordVectors(spark, docs).map { case (doc, ws, nInDoc, kOld, wct) =>
+            val wi = ws.toIndexedSeq
+            val kNew = g.sampleTopic(wi, nInDoc, kOld, doc, iter, tdcB.value,
+              (pos, t) => wct(pos)(t), twsB.value, numDocs, nw)
+            (doc, ws, nInDoc, kNew)
+          }
+      next.toDF("doc", "words", "nWords", "topic")
     }
 
-    val cadence = math.max(1, checkpointEvery)
-    var nextCommitRel = 0
-    (startIter until numIters).foreach { iter =>
-      if (!useJoin) {
-        val (tdc, twc, tws) = countersOf(docs)
-        val tdcB = spark.sparkContext.broadcast(tdc)
-        val twcB = spark.sparkContext.broadcast(twc)
-        val twsB = spark.sparkContext.broadcast(tws)
-        docs = docs.map { case (doc, ws, nInDoc, kOld) =>
-          val wi = ws.toIndexedSeq
-          val twc0 = twcB.value
-          val kNew = g.sampleTopic(wi, nInDoc, kOld, doc, iter, tdcB.value,
-            (pos, t) => twc0.getOrElse((t, wi(pos)._1), 0L).toDouble,
-            twsB.value, numDocs, nw)
-          (doc, ws, nInDoc, kNew)
-        }.localCheckpoint(true)
-      } else {
-        val (tdc, tws) = smallCounters(docs)
-        val tdcB = spark.sparkContext.broadcast(tdc)
-        val twsB = spark.sparkContext.broadcast(tws)
-        docs = withWordVectors(spark, docs).map { case (doc, ws, nInDoc, kOld, wct) =>
-          val wi = ws.toIndexedSeq
-          val kNew = g.sampleTopic(wi, nInDoc, kOld, doc, iter, tdcB.value,
-            (pos, t) => wct(pos)(t), twsB.value, numDocs, nw)
-          (doc, ws, nInDoc, kNew)
-        }.localCheckpoint(true)
-      }
-      // durable Gibbs state on the cadence + forced final commit
-      ckpt.foreach { t =>
-        val rel = iter - startIter
-        if (rel >= nextCommitRel || iter == numIters - 1) {
-          graft.io.TableIO.commit(
-            docs.toDF("doc", "words", "nWords", "topic"), t, iter, Map.empty)
-          nextCommitRel = rel / cadence * cadence + cadence
-        }
-      }
-    }
+    val state = graft.graph.Supersteps.iterate(spark, init, resample, numIters,
+      checkpointTable, checkpointEvery).state
+    val docs = typed(state)
 
     // final counters: the K×V table is materialized ONCE for driver-side
     // `infer` only on the broadcast path; the unbounded-vocab path keeps it
     // distributed (inferMemberships/entropy re-derive vectors via the join)
-    if (!useJoin) {
-      val (tdc, twc, tws) = countersOf(docs)
-      GSDMMModel(this, docs.toDF("doc", "words", "nWords", "topic"),
-        tdc, twc, tws, numDocs, numWords, countersCollected = true)
-    } else {
-      val (tdc, tws) = smallCounters(docs)
-      GSDMMModel(this, docs.toDF("doc", "words", "nWords", "topic"),
-        tdc, Map.empty, tws, numDocs, numWords, countersCollected = false)
-    }
+    val (tdc, tws) = smallCounters(docs)
+    val twc = if (useJoin) Map.empty[(Int, Int), Long] else wordCounts(docs)
+    GSDMMModel(this, state, tdc, twc, tws, tdc.sum, numWords,
+      countersCollected = !useJoin)
   }
 }
 

@@ -81,57 +81,49 @@ class LDA(
     *    word's K-vector into the per-doc resample group). One extra shuffle
     *    per superstep buys an unbounded vocab — at 1e8 terms × 100 topics
     *    the broadcast variant would OOM the driver.
-    * Only the K-sized TopicCountSum is always collected (K is tiny). */
-  /** @param checkpointTable [[graft.io.TableIO]] table for durable
+    * Only the K-sized TopicCountSum is always collected (K is tiny).
+    *
+    * @param checkpointTable [[graft.io.TableIO]] table for durable
     *                        per-iteration assignments `(doc, word, occ,
-    *                        topic)` — the reliable-commit cadence for long
-    *                        Gibbs runs on a real cluster (localCheckpoint
-    *                        blocks die with their executor); a rerun against
-    *                        the same table resumes at the committed
-    *                        iteration with an identical trajectory (RNG is
-    *                        counter-mode on the absolute iteration).
-    * @param checkpointEvery commit cadence in iterations; the final
-    *                        iteration always commits. */
+    *                        topic)`; resume, cadence (`checkpointEvery`)
+    *                        and the final commit follow the
+    *                        [[graft.graph.Supersteps]] contract. A resumed
+    *                        run has an identical trajectory: the RNG is
+    *                        counter-mode on the absolute iteration. */
   def train(spark: SparkSession, bow: DataFrame, numWords: Int, numIters: Int,
       checkpointTable: String = null, checkpointEvery: Int = 1)
       : LDAModel = {
     import spark.implicits._
     val nw = numWords.toDouble
     val lda = this
-
-    val ckpt = Option(checkpointTable).filter(_.nonEmpty)
-    val resumed = ckpt.flatMap(graft.io.TableIO.read(spark, _))
-    val startIter = resumed.map(_._1.step.toInt + 1).getOrElse(0)
-
-    // explode occurrences; init topic = seeded hash (reference: rand.Intn)
-    var assigns: Dataset[(Long, Int, Int, Int)] = resumed match {
-      case Some((_, df)) =>
-        df.select(col("doc").as("_1"), col("word").as("_2"),
-            col("occ").as("_3"), col("topic").as("_4"))
-          .as[(Long, Int, Int, Int)].localCheckpoint(true)
-      case None => bow
-        .select(col("doc").cast("long"), col("word").cast("int"), col("cnt").cast("int"))
-        .as[(Long, Int, Int)]
-        .flatMap { case (doc, word, cnt) =>
-          (0 until cnt).map { occ =>
-            (doc, word, occ, math.floorMod(rngHash(doc, word, occ, -1), numTopics).toInt)
-          }
-        }.localCheckpoint(true)
-    }
-
     val useJoin = numWords.toLong * numTopics > broadcastCeiling
     val k = numTopics
 
-    val cadence = math.max(1, checkpointEvery)
-    var nextCommitRel = 0
-    (startIter until numIters).foreach { iter =>
+    def typed(state: DataFrame): Dataset[(Long, Int, Int, Int)] =
+      state.select(col("doc").as("_1"), col("word").as("_2"),
+          col("occ").as("_3"), col("topic").as("_4"))
+        .as[(Long, Int, Int, Int)]
+
+    // explode occurrences; init topic = seeded hash (reference: rand.Intn)
+    def init: DataFrame = bow
+      .select(col("doc").cast("long"), col("word").cast("int"), col("cnt").cast("int"))
+      .as[(Long, Int, Int)]
+      .flatMap { case (doc, word, cnt) =>
+        (0 until cnt).map { occ =>
+          (doc, word, occ, math.floorMod(rngHash(doc, word, occ, -1), numTopics).toInt)
+        }
+      }.toDF("doc", "word", "occ", "topic")
+
+    // one Gibbs superstep; the driver's checkpoint after it is the barrier
+    def resample(state: DataFrame, iter: Int): DataFrame = {
+      val assigns = typed(state)
       val topicSum = assigns.groupByKey(_._4).count().collect().toMap
       val tsB = spark.sparkContext.broadcast(topicSum)
 
-      if (!useJoin) {
+      val next = if (!useJoin) {
         val wordTopic = assigns.groupByKey(r => (r._2, r._4)).count().collect().toMap
         val wtB = spark.sparkContext.broadcast(wordTopic)
-        assigns = assigns.groupByKey(_._1).flatMapGroups { (doc, it) =>
+        assigns.groupByKey(_._1).flatMapGroups { (doc, it) =>
           val rows = it.toArray
           // DocTopicCount[doc] computed locally — never shuffled or broadcast
           val docTopic = new Array[Long](k)
@@ -144,20 +136,20 @@ class LDA(
               idxK => ts.getOrElse(idxK, 0L).toDouble, prefix)
             (d, w, o, kNew)
           }.iterator
-        }.localCheckpoint(true) // superstep barrier + lineage truncation
+        }
       } else {
         // distributed counter table joined on word: (word -> K-vector)
-        val wt = assigns.toDF("doc", "word", "occ", "topic")
+        val wt = state
           .groupBy("word", "topic").agg(count(lit(1)).as("c"))
           .groupBy("word")
           .agg(collect_list(struct(col("topic").as("_1"), col("c").as("_2")))
             .as("wts"))
-        val joined = assigns.toDF("doc", "word", "occ", "topic")
+        val joined = state
           .join(wt, "word")
           .select(col("doc").as("_1"), col("word").as("_2"),
             col("occ").as("_3"), col("topic").as("_4"), col("wts").as("_5"))
           .as[(Long, Int, Int, Int, Seq[(Int, Long)])]
-        assigns = joined.groupByKey(_._1).flatMapGroups { (doc, it) =>
+        joined.groupByKey(_._1).flatMapGroups { (doc, it) =>
           val rows = it.toArray
           val docTopic = new Array[Long](k)
           rows.foreach(r => docTopic(r._4) += 1)
@@ -172,18 +164,14 @@ class LDA(
               idxK => ts.getOrElse(idxK, 0L).toDouble, prefix)
             (d, w, o, kNew)
           }.iterator
-        }.localCheckpoint(true)
-      }
-      // durable Gibbs state on the cadence + forced final commit
-      ckpt.foreach { t =>
-        val rel = iter - startIter
-        if (rel >= nextCommitRel || iter == numIters - 1) {
-          graft.io.TableIO.commit(
-            assigns.toDF("doc", "word", "occ", "topic"), t, iter, Map.empty)
-          nextCommitRel = rel / cadence * cadence + cadence
         }
       }
+      next.toDF("doc", "word", "occ", "topic")
     }
+
+    val state = graft.graph.Supersteps.iterate(spark, init, resample, numIters,
+      checkpointTable, checkpointEvery).state
+    val assigns = typed(state)
 
     // final counters: K-sized topicSum always; the vocab×K table only on
     // the broadcast path — the useJoin path's whole point is that this
@@ -192,11 +180,9 @@ class LDA(
     val topicSum = assigns.groupByKey(_._4).count().collect().toMap
     if (!useJoin) {
       val wordTopic = assigns.groupByKey(r => (r._2, r._4)).count().collect().toMap
-      LDAModel(this, assigns.toDF("doc", "word", "occ", "topic"),
-        wordTopic, topicSum, numWords, countersCollected = true)
+      LDAModel(this, state, wordTopic, topicSum, numWords, countersCollected = true)
     } else
-      LDAModel(this, assigns.toDF("doc", "word", "occ", "topic"),
-        Map.empty, topicSum, numWords, countersCollected = false)
+      LDAModel(this, state, Map.empty, topicSum, numWords, countersCollected = false)
   }
 }
 

@@ -201,30 +201,88 @@ class GraphKernelsSpec extends SparkSpec {
     import graft.io.TableIO
     val edges = Referee.zipf(200, 800, 5L)
 
-    // cadence: 6 supersteps, checkpointEvery=2 -> commits at steps 1,3,5
+    // cadence: 6 supersteps, checkpointEvery=2 -> commits at relative steps
+    // 0, 2, 4 plus the final step 5
     val t1 = tmpDir("pr_ckpt_cadence")
     PageRank.run(spark, edgeDF(edges), maxIters = 6, tol = -1.0,
       checkpointTable = t1, checkpointEvery = 2)
-    assert(TableIO.history(t1).map(_.step) == Seq(1L, 3L, 5L))
+    assert(TableIO.history(t1).map(_.step) == Seq(0L, 2L, 4L, 5L))
 
-    // fault injection: truth = 6 uninterrupted supersteps; crashed run
-    // stops after 3 (HEAD left at step 1 under cadence 2); resume from the
-    // table completes the remaining supersteps and matches truth
+    // fault injection: a crash after the parquet writes of the step-4 and
+    // step-5 snapshots but before their manifest renames. Deleting those
+    // manifests leaves HEAD pointing past the last real commit and the
+    // orphan data/snap-* dirs on disk; the resume must read the step-2
+    // snapshot, overwrite the orphans and match the uninterrupted run
     val truth = PageRank.run(spark, edgeDF(edges), maxIters = 6, tol = -1.0)
       .ranks.as[(Long, Double)].collect().toMap
     val t2 = tmpDir("pr_ckpt_crash")
-    PageRank.run(spark, edgeDF(edges), maxIters = 3, tol = -1.0,
+    PageRank.run(spark, edgeDF(edges), maxIters = 6, tol = -1.0,
       checkpointTable = t2, checkpointEvery = 2)
-    assert(TableIO.currentSnapshot(t2).map(_.step) == Some(1L))
-    val resumed = PageRank.run(spark, edgeDF(edges), maxIters = 6, tol = -1.0,
-      checkpointTable = t2, checkpointEvery = 2)
-      .ranks.as[(Long, Double)].collect().toMap
-    assert(resumed.keySet == truth.keySet)
-    truth.foreach { case (v, r) =>
-      assert(math.abs(resumed(v) - r) < 1e-12, s"resume vid=$v")
+    val lost = TableIO.history(t2).filter(_.step > 2L)
+    assert(lost.map(_.snapshotId) == Seq(2L, 3L))
+    lost.foreach { m =>
+      val manifest = new java.io.File(t2, s"manifests/manifest-${m.snapshotId}.json")
+      assert(manifest.delete(), s"could not delete $manifest")
     }
-    // lineage chain is gap-free at the cadence after resume: 1,3,5
-    assert(TableIO.history(t2).map(_.step) == Seq(1L, 3L, 5L))
+    assert(new java.io.File(t2, "data/snap-000003").isDirectory, "orphan data dir")
+    assert(TableIO.currentSnapshot(t2).map(_.step) == Some(2L))
+    val r = PageRank.run(spark, edgeDF(edges), maxIters = 6, tol = -1.0,
+      checkpointTable = t2, checkpointEvery = 2)
+    val resumed = r.ranks.as[(Long, Double)].collect().toMap
+    assert(resumed.keySet == truth.keySet)
+    truth.foreach { case (v, x) =>
+      assert(math.abs(resumed(v) - x) < 1e-12, s"resume vid=$v")
+    }
+    // the resumed call counts its cadence from step 3: commits 3 and 5
+    assert(TableIO.history(t2).map(_.step) == Seq(0L, 2L, 3L, 5L))
+    val (head, back) = TableIO.read(spark, t2).get
+    assert(head.step == 5L)
+    assert(back.as[(Long, Double)].collect().toMap == resumed)
+  }
+
+  test("PageRank commits its final ranks when the run ends off-cadence") {
+    import graft.io.TableIO
+    val edges = Referee.zipf(200, 800, 19L)
+    val t = tmpDir("pr_final_commit")
+    val r = PageRank.run(spark, edgeDF(edges), maxIters = 5, tol = -1.0,
+      checkpointTable = t, checkpointEvery = 2)
+    val (head, back) = TableIO.read(spark, t).get
+    assert(head.step == r.supersteps - 1,
+      s"HEAD step ${head.step} must be the last superstep ${r.supersteps - 1}")
+    assert(back.as[(Long, Double)].collect().toMap
+      == r.ranks.as[(Long, Double)].collect().toMap)
+  }
+
+  test("replaced superstep state is released: a call leaves only the state it returns") {
+    import graft.topics.{GSDMM, LDA}
+    val sc = spark.sparkContext
+    val e = edgeDF(Referee.chain10)
+    val bow = Seq((0L, 0, 2), (0L, 1, 1), (1L, 2, 1), (1L, 3, 2), (2L, 0, 1))
+      .toDF("doc", "word", "cnt")
+    // persistent RDDs a call creates and leaves behind. The result stays
+    // referenced until after the count, so the ContextCleaner cannot
+    // remove its checkpoint while it is being counted
+    def leftover(run: => DataFrame): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = run
+      assert(out.collect().nonEmpty)
+      val left = (sc.getPersistentRDDs.keySet -- before).size
+      assert(out.columns.nonEmpty)
+      left
+    }
+    val kernels: Seq[(String, Int => DataFrame)] = Seq(
+      "pagerank" -> (n => PageRank.run(spark, e, maxIters = n, tol = -1.0).ranks),
+      "cc" -> (n => ConnectedComponents.hashMin(spark, e, maxIters = n)),
+      "lp" -> (n => LabelPropagation.run(spark, e, numIters = n)),
+      "lda" -> (n => new LDA(2, seed = 3L).train(spark, bow, 4, n).assignments),
+      "gsdmm" -> (n => new GSDMM(2, seed = 3L).train(spark, bow, 4, n).docs))
+    kernels.foreach { case (name, run) =>
+      val short = leftover(run(1))
+      val long = leftover(run(6))
+      // only the returned state's checkpoint outlives the call
+      assert(short <= 1 && long <= 1,
+        s"$name leaves $short persistent RDDs after 1 step, $long after 6")
+    }
   }
 
   test("CC/LP checkpoint cadence: k-superstep commits, final state durable") {
