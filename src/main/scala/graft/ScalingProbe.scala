@@ -51,8 +51,6 @@ object ScalingProbe {
         kahan = kahan, stepsPerJob = spj).ranks.count()
       (System.nanoTime() - t0) / 1e9
     }
-    if (sys.env.get("SPARK_GRAFT_PR_DEBUG").contains("1"))
-      println(times.map(t => f"$t%.2f").mkString("""{"rep_secs":[""", ",", "]}"))
     g.unpersist()
     spark.stop()
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()

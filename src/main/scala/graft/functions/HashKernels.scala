@@ -443,7 +443,7 @@ object HashKernels {
 
   /** Random-hyperplane LSH signature of a double vector: `numPlanes` sign
     * bits packed into a long, plane `p`'s component at dim `j` being
-    * `mix(mix(planeOffset+p) ^ (j * 0xC2B2AE3D27D4EB4D)) / 2^63` — the
+    * `mix(mix(planeOffset+p) ^ (j * 0xC2B2AE3D27D4EB4F)) / 2^63` — the
     * exact double chain of [[graft.pipeline.Ann.planeComponent]] and the
     * scalar UDF this replaces (projection is the same ascending-dim left
     * fold, divide-then-multiply-then-add, so every acc double is
@@ -478,19 +478,25 @@ object HashKernels {
     * interpreted `aggregate(sort_array(b), struct(prev,run,best), ...)`
     * fold on the per-document repetition-signal path — integer-valued, so
     * equivalence is exact, not FP-sensitive. Empty array → 0 (the HOF
-    * form's initial `best`). */
+    * form's initial `best`). A null element is skipped: in the HOF form it
+    * equals nothing, so it only ever forms a run of 1, which `best = 1`
+    * already covers. */
   def maxSortedRun(arr: ArrayData): Int = {
     val n = arr.numElements()
     if (n == 0) return 0
     val a = new Array[UTF8String](n)
+    var m = 0
     var i = 0
-    while (i < n) { a(i) = arr.getUTF8String(i); i += 1 }
+    while (i < n) {
+      if (!arr.isNullAt(i)) { a(m) = arr.getUTF8String(i); m += 1 }
+      i += 1
+    }
     // natural-order sort: UTF8String is Comparable (binary byte order)
-    java.util.Arrays.sort(a.asInstanceOf[Array[Object]])
+    java.util.Arrays.sort(a.asInstanceOf[Array[Object]], 0, m)
     var best = 1
     var run = 1
     i = 1
-    while (i < n) {
+    while (i < m) {
       if (a(i).equals(a(i - 1))) { run += 1; if (run > best) best = run }
       else run = 1
       i += 1

@@ -97,8 +97,8 @@ object ConnectedComponents {
     * the `groupBy(dst)` shuffles. The block-end changed-count is the
     * driver's convergence action, so it materializes the block in the same
     * job (one action per block, not two). AQE stays ON (unlike
-    * [[PageRank.run]], which must protect a ReusedExchange and a vertDeg
-    * frame co-partitioned across supersteps): here each superstep's state
+    * [[PageRank.run]], which must keep a vertDeg frame co-partitioned
+    * across supersteps): here each superstep's state
     * partitioning is derived fresh, so AQE's runtime broadcast of a
     * shrunken state side / small-stage coalescing are pure wins at low
     * scale and no-ops at web scale. */

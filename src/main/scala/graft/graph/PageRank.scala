@@ -29,10 +29,17 @@ import org.apache.spark.storage.StorageLevel
   *    inside the 1e-6 gate); `kahan = true` switches to the compensated
   *    [[KahanSum]] aggregator (O(eps) error) at ~25% throughput cost when
   *    stricter reproducibility is wanted.
+  *  - the dangling mass enters the rank update as a driver-side literal:
+  *    each superstep reads `Σ rank where outDeg = 0` off its materialized
+  *    input state (one scan of the |V|-row state), so a superstep runs ONE
+  *    contribution shuffle with or without danglers. Dangler-free graphs
+  *    use the literal 0 and run no such action.
   *  - supersteps run on the [[Supersteps]] driver: `stepsPerJob` block
-  *    fusion, the convergence check once per block (delta spans the block),
-  *    and `checkpointEvery`-cadence TableIO commits of `(vid, rank)` with
-  *    delta, dangling mass and superstep seconds, resumable mid-iteration.
+  *    fusion (dangler-free graphs only — a dangler superstep needs its input
+  *    materialized), the convergence check once per block (delta spans the
+  *    block), and `checkpointEvery`-cadence TableIO commits of `(vid, rank)`
+  *    with delta, dangling mass and superstep seconds, resumable
+  *    mid-iteration.
   *  - explicit hub salting ([[saltedContribs]], composable with the superstep):
   *    contribution rows into a hot IN-degree dst are pre-split across
   *    `numSalts` sub-keys by src-hash and pre-aggregated per (dst, salt)
@@ -85,8 +92,8 @@ object PageRank {
     val vertDeg = vertices.join(outDeg, Seq("vid"), "left")
       .na.fill(0L, Seq("outDeg"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // one action: |V| and dangler count (dangler-free graphs skip the
-    // dangling-mass branch in every superstep)
+    // one action: |V| and dangler count (dangler-free graphs need no
+    // per-superstep dangling-mass action, so their supersteps fuse)
     val firstRow = vertDeg
       .agg(count(lit(1)), sum(when(col("outDeg") === 0, 1L).otherwise(0L)))
       .head()
@@ -96,7 +103,9 @@ object PageRank {
   /** @param checkpointTable TableIO table for superstep snapshots;
     *                        null/empty disables checkpointing.
     * `stepsPerJob`, `checkpointEvery` and resume follow the [[Supersteps]]
-    * contract. */
+    * contract, except that a graph with dangling vertices runs one
+    * superstep per block whatever `stepsPerJob` says: each of its
+    * supersteps reads the dangling mass of its materialized input state. */
   def run(
       spark: SparkSession,
       edges: DataFrame, // (src LONG, dst LONG), deduped, no self-loops
@@ -108,16 +117,12 @@ object PageRank {
       stepsPerJob: Int = 1,
       checkpointEvery: Int = 1): Result = {
 
-    // AQE is scoped OFF for the kernel's internal queries: its stage cache
-    // misses the canonical equality between the dangling-total aggregate
-    // and the rank-update join, so with AQE on the contribution shuffle
-    // (the edge join + map-side combine — the whole superstep) executes
-    // TWICE per superstep on graphs with danglers; without AQE the total
-    // rides a ReusedExchange (asserted by PlanSpec). AQE also coalesces the
-    // contribution exchange at small sizes, destabilizing the 32-partition
-    // co-partitioning the next superstep's join relies on. Nothing AQE
-    // offers applies here: partition counts are hand-sized, skew is handled
-    // by salting, and no superstep join is broadcastable at web scale.
+    // AQE is scoped OFF for the kernel's internal queries: it coalesces the
+    // contribution exchange at small sizes, breaking the co-partitioning
+    // with the cached (vid, outDeg) frame that the rank-update join and the
+    // next superstep's edge join rely on. Nothing AQE offers applies here:
+    // partition counts are hand-sized, skew is handled by salting, and no
+    // superstep join is broadcastable at web scale.
     val g = prepare(spark, edges)
     try runPrepared(spark, g, damping, tol, maxIters, checkpointTable,
       kahan, stepsPerJob, checkpointEvery)
@@ -158,7 +163,6 @@ object PageRank {
     val e = g.edges
     val vertDeg = g.vertDeg
     val n = g.n
-    val hasDanglers = g.hasDanglers
 
     // Join strategy note (guide §3.1, measured r6): a shuffled-hash hint on
     // the state side of the contribution join (skipping its per-superstep
@@ -167,8 +171,9 @@ object PageRank {
     // shuffle-bound, not sort-bound. Sort-merge stays: it spills gracefully
     // when a 100 TB state partition outgrows task memory.
 
-    // one chained superstep: state (vid, outDeg, rank) -> next state
-    def superstep(st: DataFrame): DataFrame = {
+    // one chained superstep: state (vid, outDeg, rank) -> next state, given
+    // the dangling mass of the input state
+    def superstep(st: DataFrame, dangling: Double): DataFrame = {
       val contribs = e
         .join(st.where(col("outDeg") > 0).withColumnRenamed("vid", "src")
           .select(col("src"), (col("rank") / col("outDeg")).as("c")), "src")
@@ -180,29 +185,11 @@ object PageRank {
       val summed =
         if (kahan) contribs.groupBy("vid").agg(KahanSum.column(col("c")).as("inMass"))
         else contribs.groupBy("vid").agg(sum(col("c")).as("inMass"))
-
-      // Dangling mass WITHOUT a separate per-superstep job: rank mass is
-      // conserved at 1, so Σ_dangling rank = 1 - Σ_v inMass. The 1-row
-      // total crossJoins into the rank update (broadcast NLJ) and its
-      // aggregate reads the SAME contribution shuffle (exchange reuse) —
-      // one job per superstep instead of two. Dangler-free graphs skip
-      // even that branch.
-      if (!hasDanglers)
-        vertDeg.join(summed, Seq("vid"), "left")
-          .na.fill(0.0, Seq("inMass"))
-          .select(col("vid"), col("outDeg"),
-            (lit((1.0 - damping) / n)
-              + lit(damping) * col("inMass")).as("rank"))
-      else {
-        val totals = summed
-          .agg(coalesce(sum(col("inMass")), lit(0.0)).as("totalIn"))
-        vertDeg.join(summed, Seq("vid"), "left")
-          .na.fill(0.0, Seq("inMass"))
-          .crossJoin(totals)
-          .select(col("vid"), col("outDeg"),
-            (lit((1.0 - damping) / n) + lit(damping)
-              * (col("inMass") + (lit(1.0) - col("totalIn")) / n)).as("rank"))
-      }
+      vertDeg.join(summed, Seq("vid"), "left")
+        .na.fill(0.0, Seq("inMass"))
+        .select(col("vid"), col("outDeg"),
+          (lit((1.0 - damping) / n + damping * dangling / n)
+            + lit(damping) * col("inMass")).as("rank"))
     }
 
     // the convergence check costs one join+agg per BLOCK; fixed-iteration
@@ -216,20 +203,20 @@ object PageRank {
       Supersteps.Check(delta < tol, Map("delta" -> delta))
     }
 
-    // metrics-only dangling mass: a cheap scan of the freshly materialized
-    // |V|-row state, paid only by committed blocks
+    // Σ rank over the dangling vertices of a materialized state: a cheap
+    // scan of the |V|-row state, no action at all on a dangler-free graph
     def danglingMass(st: DataFrame): Double =
-      if (!hasDanglers) 0.0
+      if (!g.hasDanglers) 0.0
       else st.where(col("outDeg") === 0)
         .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
 
     val r = Supersteps.iterate(spark,
       init = vertDeg.withColumn("rank", lit(1.0 / n)),
-      step = (st, _) => superstep(st),
+      step = (st, _) => superstep(st, danglingMass(st)),
       maxIters = maxIters,
       checkpointTable = checkpointTable,
       checkpointEvery = checkpointEvery,
-      stepsPerJob = stepsPerJob,
+      stepsPerJob = if (g.hasDanglers) 1 else stepsPerJob,
       // snapshots store (vid, rank); outDeg re-attaches from the cached frame
       resume = snap => vertDeg.join(snap.select(col("vid"), col("rank")), Seq("vid")),
       snapshot = _.select(col("vid"), col("rank")),

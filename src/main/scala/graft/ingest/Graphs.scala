@@ -101,10 +101,4 @@ object Graphs {
       .groupBy(floor(log2(col("outDeg"))).as("log2deg"))
       .agg(count(lit(1)).as("vertices"), sum("outDeg").as("edges"))
       .orderBy("log2deg")
-
-  /** Vertices whose out-degree exceeds `threshold` — the hub set whose join
-    * side gets salted by the kernels (explicit skew handling; AQE's skew
-    * join doesn't cover iterative self-joins well). */
-  def hubs(edges: DataFrame, threshold: Long): DataFrame =
-    outDegrees(edges).where(col("outDeg") > threshold).select("src", "outDeg")
 }

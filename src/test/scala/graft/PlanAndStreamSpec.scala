@@ -188,53 +188,6 @@ class PlanSpec extends SparkSpec {
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }
-
-  test("dangling-mass total reads the contribution shuffle via exchange reuse") {
-    // replicate the PageRank superstep's dangling branch UNDER THE
-    // KERNEL'S EXECUTION CONDITIONS (AQE off — PageRank.run scopes it off
-    // precisely because AQE's stage cache misses this reuse and executes
-    // the contribution shuffle twice): the 1-row totalIn aggregate and the
-    // rank-update join both read `summed` — the physical plan must contain
-    // a ReusedExchange (one contribution shuffle per superstep, not two)
-    // zipf graph with planted danglers; broadcast threshold lowered so the
-    // |V|-row summed side does NOT broadcast (as at web scale) while the
-    // 1-row totals still rides a BroadcastNestedLoopJoin
-    val edges = (graft.graph.Referee.zipf(500, 2000, 42L) ++
-      Seq((1L, 9001L), (2L, 9002L))).toDF("src", "dst")
-    val e = edges.repartition($"src").sortWithinPartitions("src", "dst").cache()
-    e.count()
-    val vertDeg = e.select($"src".as("vid"))
-      .union(e.select($"dst".as("vid"))).distinct()
-      .join(e.groupBy($"src".as("vid")).agg(count(lit(1)).as("outDeg")),
-        Seq("vid"), "left")
-      .na.fill(0L, Seq("outDeg")).cache()
-    val n = vertDeg.count()
-    val st = vertDeg.withColumn("rank", lit(1.0 / n))
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val contribs = e
-        .join(st.where($"outDeg" > 0).withColumnRenamed("vid", "src")
-          .select($"src", ($"rank" / $"outDeg").as("c")), "src")
-        .select($"dst".as("vid"), $"c")
-      val summed = contribs.groupBy("vid").agg(sum($"c").as("inMass"))
-      val totals = summed.agg(coalesce(sum($"inMass"), lit(0.0)).as("totalIn"))
-      val q = vertDeg.join(summed, Seq("vid"), "left")
-        .na.fill(0.0, Seq("inMass"))
-        .crossJoin(totals)
-        .select($"vid", (lit(0.15 / n) + lit(0.85)
-          * ($"inMass" + (lit(1.0) - $"totalIn") / n)).as("rank"))
-      val plan = executed(q)
-      assert(plan.contains("ReusedExchange") || plan.contains("(reuse"),
-        plan.take(3000))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      e.unpersist(); vertDeg.unpersist()
-    }
-  }
 }
 
 /** Streaming ingestion: AvailableNow micro-batch extracts the same edges

@@ -304,16 +304,49 @@ class FunctionsSpec extends SparkSpec {
     assert(plan.contains("graft_hyperplane_sig") && !plan.contains("ScalaUDF"), plan)
   }
 
+  test("hyperplaneSig follows its documented plane formula") {
+    // plane p's component at dim j is
+    // mix(mix(planeOffset+p) ^ (j * 0xC2B2AE3D27D4EB4F)) / 2^63
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val mix = graft.ingest.Pages.mix _
+    val rnd = new scala.util.Random(41)
+    for (_ <- 0 until 50; planes <- Seq(1, 13, 64); off <- Seq(0, 9)) {
+      val v = Array.fill(1 + rnd.nextInt(40))(rnd.nextGaussian())
+      val want = (0 until planes).foldLeft(0L) { (bits, p) =>
+        val pm = mix((off + p).toLong)
+        val acc = v.indices.foldLeft(0.0) { (a, j) =>
+          a + v(j) * (mix(pm ^ (j.toLong * 0xC2B2AE3D27D4EB4FL)).toDouble /
+            Long.MaxValue.toDouble)
+        }
+        if (acc >= 0) bits | (1L << p) else bits
+      }
+      val got = HashKernels.hyperplaneSig(
+        new GenericArrayData(v.map(Double.box).toArray[Any]), planes, off)
+      assert(got == want, s"planes=$planes off=$off")
+    }
+  }
+
+  test("HyperplaneSig rejects numPlanes outside 1..64 however it is built") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val vec = Literal.create(Seq(1.0, -1.0),
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
+    Seq(0, 65, -1).foreach { planes =>
+      intercept[IllegalArgumentException](HyperplaneSig(vec, planes, 0))
+    }
+    assert(HyperplaneSig(vec, 64, 0).numPlanes == 64)
+  }
+
   test("MaxSortedRun expression equals the aggregate(sort_array) reference fold") {
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(31)
     // small-alphabet token arrays force heavy duplication; include empty,
-    // single, all-equal, and adversarial unicode grams
+    // single, all-equal, null-element and adversarial unicode grams
     val arrays: Seq[Seq[String]] = (0 until 150).map { _ =>
       Seq.fill(rnd.nextInt(60))(s"tok${rnd.nextInt(6)} g${rnd.nextInt(4)}")
     } ++ Seq(Seq.empty[String], Seq("only"), Seq.fill(17)("same gram")) ++
-      adversarial.grouped(7).map(_.toSeq).toSeq
+      adversarial.grouped(7).map(_.toSeq).toSeq ++
+      Seq(Seq(null), Seq(null, null), Seq(null, "a", null, "a", "b"))
     val df = (arrays :+ null.asInstanceOf[Seq[String]]).toDF("b")
     val both = df.select(
       TextAnalysis.topRunHof(col("b")).as("hof"),

@@ -1,5 +1,8 @@
 package graft.graph
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -171,11 +174,17 @@ class GraphKernelsSpec extends SparkSpec {
     assert(plan.contains("HashAggregate"), s"expected HashAggregate:\n$plan")
   }
 
+  /** `edges` plus a ring v -> v+1 mod n: every vertex gets an out-edge, so
+    * PageRank fuses the graph's supersteps (a graph with dangling vertices
+    * runs one superstep per block). */
+  def danglerFree(edges: Seq[(Long, Long)], n: Int): Seq[(Long, Long)] =
+    (edges ++ (0 until n).map(v => (v.toLong, (v + 1L) % n))).distinct
+
   test("stepsPerJob block fusion computes the same fixpoint trajectory") {
     // chaining k supersteps per job is a driver-side fusion only: the math
     // per superstep is identical, so 12 steps = 4 blocks of 3 = 12 blocks
     // of 1 up to shuffle merge-order float noise
-    val edges = Referee.zipf(400, 1600, 11L)
+    val edges = danglerFree(Referee.zipf(400, 1600, 11L), 400)
     val a = PageRank.run(spark, edgeDF(edges), maxIters = 12, tol = -1.0)
       .ranks.as[(Long, Double)].collect().toMap
     val b = PageRank.run(spark, edgeDF(edges), maxIters = 12, tol = -1.0,
@@ -314,17 +323,56 @@ class GraphKernelsSpec extends SparkSpec {
 
   test("block fusion + checkpointing compose (commits at block boundaries)") {
     import graft.io.TableIO
-    val edges = Referee.zipf(200, 800, 9L)
-    val t = tmpDir("pr_ckpt_blocks")
-    val r = PageRank.run(spark, edgeDF(edges), maxIters = 6, tol = -1.0,
-      checkpointTable = t, stepsPerJob = 2, checkpointEvery = 1)
-    assert(r.supersteps == 6)
-    // blocks of 2 -> boundaries after steps 1, 3, 5; cadence 1 commits each
-    assert(TableIO.history(t).map(_.step) == Seq(1L, 3L, 5L))
-    val truth = PageRank.run(spark, edgeDF(edges), maxIters = 6, tol = -1.0)
-      .ranks.as[(Long, Double)].collect().toMap
-    val got = r.ranks.as[(Long, Double)].collect().toMap
-    truth.foreach { case (v, x) => assert(math.abs(got(v) - x) < 1e-9) }
+    val zipf = Referee.zipf(200, 800, 9L)
+    // dangler-free: blocks of 2 -> boundaries after steps 1, 3, 5; cadence 1
+    // commits each. With danglers every superstep is its own block, so
+    // cadence 1 commits every step
+    for ((edges, commits) <- Seq(
+        danglerFree(zipf, 200) -> Seq(1L, 3L, 5L),
+        zipf -> Seq(0L, 1L, 2L, 3L, 4L, 5L))) {
+      val t = tmpDir("pr_ckpt_blocks")
+      val r = PageRank.run(spark, edgeDF(edges), maxIters = 6, tol = -1.0,
+        checkpointTable = t, stepsPerJob = 2, checkpointEvery = 1)
+      assert(r.supersteps == 6)
+      assert(TableIO.history(t).map(_.step) == commits)
+      val truth = PageRank.run(spark, edgeDF(edges), maxIters = 6, tol = -1.0)
+        .ranks.as[(Long, Double)].collect().toMap
+      val got = r.ranks.as[(Long, Double)].collect().toMap
+      truth.foreach { case (v, x) => assert(math.abs(got(v) - x) < 1e-9) }
+    }
+  }
+
+  test("a dangler superstep runs one contribution shuffle, fused or not") {
+    // the contribution exchange writes one partial sum per distinct dst of
+    // each CSR edge partition: `contrib` records. The only other shuffle of
+    // a superstep is the dangling-mass total, one record per partition
+    val sc = spark.sparkContext
+    val g = PageRank.prepare(spark, edgeDF(Referee.zipf(600, 3000, 23L)))
+    val counter = new ShuffleRecords
+    sc.addSparkListener(counter)
+    try {
+      assert(g.hasDanglers)
+      val contrib = g.edges.rdd
+        .mapPartitions(rows => Iterator(rows.map(_.getLong(1)).toSet.size.toLong))
+        .sum().toLong
+      val partitions = g.edges.rdd.getNumPartitions
+      val steps = 6
+      for (spj <- Seq(1, 3)) {
+        val group = s"pr_dangler_spj$spj"
+        sc.setJobGroup(group, group)
+        try PageRank.runPrepared(spark, g, maxIters = steps, tol = -1.0,
+          stepsPerJob = spj)
+        finally sc.clearJobGroup()
+        val records = counter.of(group, sc.statusTracker.getJobIdsForGroup(group).length)
+        assert(records >= steps * contrib &&
+          records <= steps * (contrib + partitions),
+          s"stepsPerJob=$spj: $records shuffle records in $steps supersteps, " +
+            s"one contribution exchange is $contrib")
+      }
+    } finally {
+      sc.removeSparkListener(counter)
+      g.unpersist()
+    }
   }
 
   test("kernels are partitioning-invariant") {
@@ -430,6 +478,43 @@ class GraphKernelsSpec extends SparkSpec {
     val committed = back.as[(Long, Double)].collect().toMap
     r.ranks.as[(Long, Double)].collect().foreach { case (v, x) =>
       assert(committed(v) == x, s"committed rank differs at vid=$v")
+    }
+  }
+}
+
+/** Shuffle-write records of the stages each job group ran. */
+final class ShuffleRecords extends SparkListener {
+  private val groupOfJob = mutable.Map.empty[Int, String]
+  private val groupOfStage = mutable.Map.empty[Int, String]
+  private val records = mutable.Map.empty[String, Long].withDefaultValue(0L)
+  private val jobsEnded = mutable.Map.empty[String, Int].withDefaultValue(0)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      .foreach { g =>
+        groupOfJob(e.jobId) = g
+        e.stageIds.foreach(groupOfStage(_) = g)
+      }
+  }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+    for (g <- groupOfStage.get(e.stageId); m <- Option(e.taskMetrics))
+      records(g) += m.shuffleWriteMetrics.recordsWritten
+  }
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+    groupOfJob.get(e.jobId).foreach(jobsEnded(_) += 1)
+  }
+
+  /** The group's records, once the ends of its `jobs` jobs were delivered
+    * (task ends precede their job's end on the listener bus). */
+  def of(group: String, jobs: Int): Long = {
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (synchronized(jobsEnded(group)) < jobs && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    synchronized {
+      assert(jobsEnded(group) == jobs, s"listener saw ${jobsEnded(group)} of $jobs jobs")
+      records(group)
     }
   }
 }
