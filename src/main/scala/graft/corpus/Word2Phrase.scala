@@ -69,6 +69,7 @@ object Word2Phrase {
     val pairs = scored.select(concat_ws("\u0000", col("t1"), col("t2")).as("k"))
       .as[String].collect().toSet
     scored.unpersist(false)
+    uni.unpersist(false)
     val pairsB = spark.sparkContext.broadcast(pairs)
 
     toks.as[(Long, Seq[String])].map { case (doc, ts) =>
@@ -84,14 +85,16 @@ object Word2Phrase {
     }.toDF("doc", "toks")
   }
 
-  /** Full recursive word2phrase: `numIters` passes (CitationGraphs.go:298). */
+  /** Full recursive word2phrase: `numIters` passes (CitationGraphs.go:298),
+    * one superstep each on the [[graft.graph.Supersteps]] driver, which
+    * checkpoints every pass's output and releases the pass it replaces. */
   def run(spark: SparkSession, docs: DataFrame, numIters: Int = 2,
-      minFreq: Int = 2, minScore: Double = 1e-8, useV2: Boolean = false): DataFrame = {
-    var cur = docs.select(col("doc"),
-      graft.text.TextAnalysis.tokens(lower(col("text"))).as("toks"))
-    (0 until numIters).foreach { _ =>
-      cur = pass(spark, cur, minFreq, minScore, useV2).localCheckpoint(true)
-    }
-    cur
-  }
+      minFreq: Int = 2, minScore: Double = 1e-8, useV2: Boolean = false): DataFrame =
+    graft.graph.Supersteps.iterate(spark,
+      init = docs.select(col("doc"),
+        graft.text.TextAnalysis.tokens(lower(col("text"))).as("toks")),
+      step = (toks, _) => pass(spark, toks, minFreq, minScore, useV2),
+      maxIters = numIters,
+      checkpointTable = null,
+      checkpointEvery = 1).state
 }

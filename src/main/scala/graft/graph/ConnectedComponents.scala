@@ -16,8 +16,8 @@ import org.apache.spark.storage.StorageLevel
   *    scale path for 10^12-vertex web graphs.
   *
   * Both return `(vid LONG, component LONG)` with component = min member vid
-  * (deterministic); [[hashMin]] checkpoints per-superstep state via
-  * [[graft.io.TableIO]].
+  * (deterministic) and both run on the [[Supersteps]] driver; [[hashMin]]
+  * checkpoints per-superstep state via [[graft.io.TableIO]].
   * The reference consumes CC semantics through its DBSCAN community
   * expansion (CitationGraphs.go:2873) — ε-threshold similarity graph
   * components; this kernel is that expansion made distributed.
@@ -144,66 +144,69 @@ object ConnectedComponents {
     * small-star: ∀u, m = min(N(u) ∪ {u}); emit (v, m) for v ∈ N(u), v ≤ u
     * (plus (u, m)). Edge lists are kept as directed pairs with the
     * neighborhood grouped on `u`.
+    *
+    * Runs on the [[Supersteps]] driver with the edge set as its state: one
+    * superstep is a large-star round followed by a small-star round, and
+    * the driver releases each replaced edge set. No table: the state is an
+    * edge set, not the `(vid, component)` rows a snapshot would hold.
     */
   def smallStarLargeStar(
       spark: SparkSession,
       edges: DataFrame,
       maxIters: Int = 50): DataFrame = {
-    // canonical (u > v) pairs directly — symmetrize-then-recanonicalize
+    // invariant: pairs (u, v) with v < u ("child -> smaller neighbor").
+    // Canonical (u > v) pairs directly — symmetrize-then-recanonicalize
     // would dedup the same |E| set through a 2|E|-row exchange (guide §2.3)
-    var e = edges
+    def init: DataFrame = edges
       .select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(true)
-    // invariant: pairs (u, v) with v < u ("child -> smaller neighbor")
 
-    // cheap convergence signature: (edge count, xor of edge hashes). Two
-    // full `except`s per round cost two extra distinct-shuffles; instead we
-    // compare signatures (one aggregation each) and only when they match run
-    // ONE confirming one-sided except (counts equal + A∖B empty ⇒ A = B).
-    def sigOf(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var prevSig = sigOf(e)
-    var iter = 0
-    var converged = false
-    while (iter < maxIters && !converged) {
-      // ---- large-star on the symmetric view -------------------------------
+    def minNeighbor(e: DataFrame): DataFrame = e.groupBy("u")
+      .agg(least(min(col("v")), first(col("u"))).as("m"))
+
+    def superstep(e: DataFrame): DataFrame = {
+      // ---- large-star on the symmetric view: connect every neighbor
+      // larger than u to m
       val sym = e.select(col("u"), col("v"))
         .union(e.select(col("v").as("u"), col("u").as("v")))
-      val minN = sym.groupBy("u")
-        .agg(least(min(col("v")), first(col("u"))).as("m"))
-      // connect every neighbor larger than u to m
-      val large = sym.join(minN, "u")
+      val large = sym.join(minNeighbor(sym), "u")
         .where(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .where(col("u") =!= col("v"))
       val afterLarge = large.union(e).distinct()
-
-      // ---- small-star -----------------------------------------------------
-      val sym2 = afterLarge
-      val minN2 = sym2.groupBy("u")
-        .agg(least(min(col("v")), first(col("u"))).as("m"))
-      val small = sym2.join(minN2, "u")
+      // ---- small-star
+      val small = afterLarge.join(minNeighbor(afterLarge), "u")
         .select(col("u"), col("v"), col("m"))
-      val newEdges = small.select(col("v").as("u"), col("m").as("v"))
+      small.select(col("v").as("u"), col("m").as("v"))
         .union(small.select(col("u"), col("m").as("v")))
         .where(col("u") =!= col("v"))
         .select(greatest(col("u"), col("v")).as("u"),
           least(col("u"), col("v")).as("v"))
         .distinct()
-        .localCheckpoint(true) // truncate lineage per round
-
-      val newSig = sigOf(newEdges)
-      converged = newSig == prevSig && newEdges.except(e).isEmpty
-      prevSig = newSig
-      e.unpersist()
-      e = newEdges
-      iter += 1
     }
+
+    // cheap convergence signature: (edge count, xor of edge hashes). Two
+    // full `except`s per round cost two extra distinct-shuffles; instead we
+    // compare signatures (one aggregation each) and only when they match run
+    // ONE confirming one-sided except (counts equal + A∖B empty ⇒ A = B).
+    // A round's new edge set is the next round's start, so the last
+    // signature is remembered by reference and each set is aggregated once;
+    // that aggregation also materializes the driver's lazy checkpoint.
+    var last: (DataFrame, (Long, Long)) = (null, (0L, 0L))
+    def sig(df: DataFrame): (Long, Long) =
+      if (last._1 eq df) last._2
+      else {
+        val r = df.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).head()
+        last = (df, (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
+        last._2
+      }
+
+    val forest = Supersteps.iterate(spark, init, (e, _) => superstep(e), maxIters,
+      checkpointTable = null, checkpointEvery = 1,
+      converged = Some((prev, next) => Supersteps.Check(
+        sig(prev) == sig(next) && next.except(prev).isEmpty, Map.empty))).state
     // star forest: every u points at its component min v; roots are their
     // own. The universe comes from raw endpoints — an endpoint-level
     // distinct, strictly cheaper than the (src,dst)-pair distinct a
@@ -211,7 +214,7 @@ object ConnectedComponents {
     // (singleton components) that symmetrize would drop.
     val vertices = edges.select(col("src").as("vid"))
       .union(edges.select(col("dst").as("vid"))).distinct()
-    vertices.join(e.select(col("u").as("vid"), col("v").as("component")),
+    vertices.join(forest.select(col("u").as("vid"), col("v").as("component")),
         Seq("vid"), "left")
       .groupBy("vid").agg(min(coalesce(col("component"), col("vid"))).as("component"))
   }

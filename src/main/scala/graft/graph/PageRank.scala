@@ -204,11 +204,18 @@ object PageRank {
     }
 
     // Σ rank over the dangling vertices of a materialized state: a cheap
-    // scan of the |V|-row state, no action at all on a dangler-free graph
+    // scan of the |V|-row state, no action at all on a dangler-free graph.
+    // A committed state is asked twice, for its manifest and as the next
+    // superstep's input, so the last scan is remembered by reference
+    var lastScan: (DataFrame, Double) = (null, 0.0)
     def danglingMass(st: DataFrame): Double =
       if (!g.hasDanglers) 0.0
-      else st.where(col("outDeg") === 0)
-        .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
+      else if (lastScan._1 eq st) lastScan._2
+      else {
+        lastScan = (st, st.where(col("outDeg") === 0)
+          .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0))
+        lastScan._2
+      }
 
     val r = Supersteps.iterate(spark,
       init = vertDeg.withColumn("rank", lit(1.0 / n)),

@@ -6,8 +6,9 @@ import org.apache.spark.sql.execution.LogicalRDD
 import graft.io.TableIO
 
 /** The superstep driver every iterative kernel runs on ([[PageRank]],
-  * [[ConnectedComponents.hashMin]], [[LabelPropagation]],
-  * [[graft.topics.LDA]], [[graft.topics.GSDMM]]). A kernel supplies its
+  * [[ConnectedComponents.hashMin]], [[ConnectedComponents.smallStarLargeStar]],
+  * [[LabelPropagation]], [[graft.topics.LDA]], [[graft.topics.GSDMM]],
+  * [[graft.corpus.Word2Phrase]]). A kernel supplies its
   * start state and one lazy superstep; the driver owns the loop and this
   * contract (north rule: every superstep resumable from a snapshot with
   * lineage and metrics):

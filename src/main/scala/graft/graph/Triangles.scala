@@ -1,17 +1,25 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Exact triangle counting (north-rule kernel #4) via the degree-ordered
-  * node-iterator: orient each undirected edge from the endpoint with the
-  * smaller `(degree, vid)` to the larger, self-join oriented edges on their
-  * source to enumerate wedges, then close each wedge with a LEFT SEMI
-  * equi-join against the oriented edge set. Degree orientation bounds every
-  * vertex's oriented out-degree by O(sqrt(m)), which is exactly the
-  * hub-skew defense for web graphs — the wedge join never explodes on a
-  * high-degree hub. All joins are equi-joins (shuffle-hash / sort-merge
-  * eligible); no theta joins anywhere in the plan.
+/** Exact per-vertex triangle counts (north-rule kernel #4) via the
+  * degree-ordered node-iterator: orient each undirected edge from the
+  * endpoint with the smaller `(degree, vid)` to the larger, self-join
+  * oriented edges on their source to enumerate wedges, then close each
+  * wedge with a LEFT SEMI equi-join against the oriented edge set. Degree
+  * orientation bounds every vertex's oriented out-degree by O(sqrt(m)),
+  * which is exactly the hub-skew defense for web graphs — the wedge join
+  * never explodes on a high-degree hub. All joins are equi-joins
+  * (shuffle-hash / sort-merge eligible); no theta joins anywhere in the plan.
+  *
+  * Two entry points: [[perVertex]] builds the lazy count frame, [[uncache]]
+  * releases what it cached. Cache lifecycle: [[perVertex]] caches the
+  * canonical and oriented edge frames, once each, and must leave them alive
+  * for the caller's action on the returned LAZY frame — so the caller owns
+  * release. A resident engine running over many different edge frames calls
+  * [[uncache]] per frame when done (one InMemoryRelation pair per distinct
+  * edge plan accumulates otherwise).
   *
   * Reference seed semantics: wedge/pair enumeration in co-occurrence
   * counting (CitationGraphs.go:236-251) and strongly-connected phrase pairs
@@ -26,23 +34,18 @@ object Triangles {
     * vertex whose only incident edges are self-loops does not appear;
     * unlike CC/LP, where every endpoint is a component/label carrier, a
     * loop-only vertex has no triangle semantics). */
-  def canonical(edges: DataFrame): DataFrame =
+  private[graft] def canonical(edges: DataFrame): DataFrame =
     edges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
 
-  /** Degree-ordered orientation: rows `(lo, hi, dlo, dhi)` where
-    * `(dlo, lo) < (dhi, hi)` lexicographically. In a triangle all three
-    * oriented edges then agree with one total order, so the closing edge of
-    * a wedge is uniquely `(b -> c)` — an equi-join key. */
-  def orient(edges: DataFrame): DataFrame =
-    orientCanonical(canonical(edges))
-
-  /** [[orient]] over an already-canonicalized (ideally cached) edge frame,
-    * so callers that need the canonical frame for other purposes too
-    * ([[perVertex]]) pay the distinct-shuffle exactly once. */
-  private def orientCanonical(canon: DataFrame): DataFrame = {
+  /** Degree-ordered orientation of the canonical frame: rows
+    * `(lo, hi, dlo, dhi)` where `(dlo, lo) < (dhi, hi)` lexicographically.
+    * In a triangle all three oriented edges then agree with one total
+    * order, so the closing edge of a wedge is uniquely `(b -> c)` — an
+    * equi-join key. */
+  private def orient(canon: DataFrame): DataFrame = {
     val deg = canon.select(col("u").as("vid"))
       .union(canon.select(col("v").as("vid")))
       .groupBy("vid").agg(count(lit(1)).as("deg"))
@@ -58,34 +61,24 @@ object Triangles {
       when(uFirst, col("dv")).otherwise(col("du")).as("dhi"))
   }
 
-  /** All triangles as rows (a, b, c) — each exactly once.
-    *
-    * Cache lifecycle: this (and [[perVertex]]) caches the canonical and
-    * oriented edge frames, and must leave them alive for the caller's
-    * action on the returned LAZY frame — so the caller owns release. A
-    * resident engine running over many different edge frames should call
-    * [[uncache]] per frame when done (one InMemoryRelation pair per
-    * distinct edge plan accumulates otherwise). */
-  def triangles(edges: DataFrame): DataFrame =
-    trianglesCanonical(canonical(edges))
-
-  /** Release the cached canonical/oriented frames for `edges` (see the
-    * cache-lifecycle note on [[triangles]]). Safe to call whether or not
-    * they are cached — CacheManager keys on the analyzed plan, which is
-    * identical however the frame was re-derived. */
+  /** Release the cached canonical/oriented frames for `edges`. Safe to call
+    * whether or not they are cached — CacheManager keys on the analyzed
+    * plan, which is identical however the frame was re-derived. */
   def uncache(edges: DataFrame): Unit = {
     val canon = canonical(edges)
-    orientCanonical(canon).unpersist()
+    orient(canon).unpersist()
     canon.unpersist()
   }
 
-  private def trianglesCanonical(canon0: DataFrame): DataFrame = {
-    // cache() is idempotent (CacheManager keys on the plan), so a caller
-    // that already cached the canonical frame shares one InMemoryRelation
-    val canon = canon0.cache()
-    val o = orientCanonical(canon).cache()
-    val before = (d1: org.apache.spark.sql.Column, v1: org.apache.spark.sql.Column,
-        d2: org.apache.spark.sql.Column, v2: org.apache.spark.sql.Column) =>
+  /** Per-vertex triangle counts `(vid, triangles)`; vertices in no triangle
+    * get 0. Each triangle (a, b, c) is enumerated ONCE and credits its three
+    * corners through one `explode`, so the plan holds one wedge self-join
+    * and one closing semi-join. ONE cached canonical frame feeds both the
+    * wedge pipeline and the vertex universe. */
+  def perVertex(edges: DataFrame): DataFrame = {
+    val canon = canonical(edges).cache()
+    val o = orient(canon).cache()
+    def before(d1: Column, v1: Column, d2: Column, v2: Column): Column =
       d1 < d2 || (d1 === d2 && v1 < v2)
     val wedges = o.as("e1")
       .join(o.as("e2"),
@@ -93,31 +86,13 @@ object Triangles {
           before(col("e1.dhi"), col("e1.hi"), col("e2.dhi"), col("e2.hi")))
       .select(col("e1.lo").as("a"), col("e1.hi").as("b"), col("e2.hi").as("c"))
     // closing edge is oriented b -> c by construction: pure equi semi-join
-    wedges.join(o.select(col("lo").as("b"), col("hi").as("c")),
+    val tri = wedges.join(o.select(col("lo").as("b"), col("hi").as("c")),
       Seq("b", "c"), "left_semi")
-  }
-
-  /** Per-vertex triangle counts (vertices in no triangle get 0). ONE
-    * cached canonical frame feeds both the wedge pipeline and the vertex
-    * universe — previously the edge-table distinct shuffled twice. */
-  def perVertex(edges: DataFrame): DataFrame = {
-    val canon = canonical(edges).cache()
-    val tri = trianglesCanonical(canon)
-    val members = tri.select(col("a").as("vid"))
-      .union(tri.select(col("b").as("vid")))
-      .union(tri.select(col("c").as("vid")))
-    val counts = members.groupBy("vid").agg(count(lit(1)).as("triangles"))
+    val counts = tri.select(explode(array(col("a"), col("b"), col("c"))).as("vid"))
+      .groupBy("vid").agg(count(lit(1)).as("triangles"))
     val vertices = canon.select(col("u").as("vid"))
       .union(canon.select(col("v").as("vid"))).distinct()
     vertices.join(counts, Seq("vid"), "left")
       .na.fill(0L, Seq("triangles"))
-  }
-
-  /** Global triangle count. Runs the action itself, so it releases its
-    * caches before returning. */
-  def globalCount(edges: DataFrame): Long = {
-    val n = triangles(edges).count()
-    uncache(edges)
-    n
   }
 }

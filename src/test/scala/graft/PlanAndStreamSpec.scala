@@ -133,6 +133,22 @@ class PlanSpec extends SparkSpec {
     } finally spark.catalog.clearCache()
   }
 
+  test("perVertex enumerates each triangle once") {
+    // the three corners of a triangle are credited by one explode over the
+    // enumerated triangles: the plan holds ONE closing semi-join, where a
+    // union of one branch per corner re-runs the wedge join and the closing
+    // semi-join three times
+    import graft.graph.Triangles
+    val edges = graft.graph.Referee.zipf(500, 2000, 42L).toDF("src", "dst")
+    try {
+      // the plan before execution: an executed adaptive plan prints its
+      // final and initial forms both
+      val plan = Triangles.perVertex(edges).queryExecution.executedPlan.toString
+      val semis = plan.linesIterator.count(_.contains("LeftSemi"))
+      assert(semis == 1, s"expected one closing semi-join, got $semis:\n$plan")
+    } finally Triangles.uncache(edges)
+  }
+
   test("dedup self-joins read ONE shuffled subplan via exchange reuse") {
     // minhashCandidates / simhashCandidatesFp self-join a frame whose
     // subplan carries the expensive per-document hashing (signature /

@@ -121,8 +121,10 @@ class GraphKernelsSpec extends SparkSpec {
     val comps = ConnectedComponents.hashMin(spark, e)
       .select(countDistinct($"component")).as[Long].head()
     assert(comps == 1L)
-    // 2 * C(5,3) = 20 triangles
-    assert(Triangles.globalCount(e) == 20L)
+    // 2 * C(5,3) = 20 triangles, each credited to its three corners
+    val corners = Triangles.perVertex(e).agg(sum($"triangles")).as[Long].head()
+    Triangles.uncache(e)
+    assert(corners / 3 == 20L && corners % 3 == 0L, s"corner credits $corners")
   }
 
   test("KahanSum merge folds partial compensation with the right sign") {
@@ -263,11 +265,14 @@ class GraphKernelsSpec extends SparkSpec {
   }
 
   test("replaced superstep state is released: a call leaves only the state it returns") {
+    import graft.corpus.Word2Phrase
     import graft.topics.{GSDMM, LDA}
     val sc = spark.sparkContext
     val e = edgeDF(Referee.chain10)
     val bow = Seq((0L, 0, 2), (0L, 1, 1), (1L, 2, 1), (1L, 3, 2), (2L, 0, 1))
       .toDF("doc", "word", "cnt")
+    val docs = Seq((0L, "new york is big"), (1L, "new york city"), (2L, "big new york"))
+      .toDF("doc", "text")
     // persistent RDDs a call creates and leaves behind. The result stays
     // referenced until after the count, so the ContextCleaner cannot
     // remove its checkpoint while it is being counted
@@ -282,9 +287,11 @@ class GraphKernelsSpec extends SparkSpec {
     val kernels: Seq[(String, Int => DataFrame)] = Seq(
       "pagerank" -> (n => PageRank.run(spark, e, maxIters = n, tol = -1.0).ranks),
       "cc" -> (n => ConnectedComponents.hashMin(spark, e, maxIters = n)),
+      "star-cc" -> (n => ConnectedComponents.smallStarLargeStar(spark, e, maxIters = n)),
       "lp" -> (n => LabelPropagation.run(spark, e, numIters = n)),
       "lda" -> (n => new LDA(2, seed = 3L).train(spark, bow, 4, n).assignments),
-      "gsdmm" -> (n => new GSDMM(2, seed = 3L).train(spark, bow, 4, n).docs))
+      "gsdmm" -> (n => new GSDMM(2, seed = 3L).train(spark, bow, 4, n).docs),
+      "word2phrase" -> (n => Word2Phrase.run(spark, docs, numIters = n, minFreq = 1)))
     kernels.foreach { case (name, run) =>
       val short = leftover(run(1))
       val long = leftover(run(6))

@@ -111,6 +111,9 @@ class DedupSpec extends SparkSpec {
       Dedup.dupClusters(spark, ids, "doc_id", chain, maxIters = 1).collect()
     }
     assert(e.getMessage.contains("maxIters"), e.getMessage)
+    // the throw still releases the persisted pair frame
+    assert(chain.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      s"pair frame left cached at ${chain.storageLevel}")
     // and with enough supersteps the same chain closes into one cluster
     val ok = Dedup.dupClusters(spark, ids, "doc_id", chain)
       .as[(Long, Long, Long)].collect()
