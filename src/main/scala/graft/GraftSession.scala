@@ -19,18 +19,15 @@ object GraftSession {
   /** REAL multi-executor session: `local-cluster[n, coresPerWorker, memMB]`
     * launches n separate executor JVMs (own heaps, own GC) — the faithful
     * sandbox stand-in for an n-executor cluster, used for the N-vs-4N
-    * scaling evidence. Application classes are shipped to executors via
-    * `spark.executor.extraClassPath` (no jar packaging needed locally). */
+    * scaling evidence. Executors get this JVM's own class path as
+    * `spark.executor.extraClassPath`, so they load the application classes
+    * from wherever the driver does (no jar packaging needed locally). */
   def localCluster(workers: Int, coresPerWorker: Int, memMB: Int,
-      shufflePartitions: Int = 32): SparkSession = {
-    val classDirs = Seq(
-      "/root/repo/target/scala-2.13/classes",
-      "/root/repo/target/scala-2.13/test-classes").mkString(":")
+      shufflePartitions: Int = 32): SparkSession =
     builder(s"local-cluster[$workers,$coresPerWorker,$memMB]", shufflePartitions)
       .config("spark.executor.memory", s"${memMB}m")
-      .config("spark.executor.extraClassPath", classDirs)
+      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
       .getOrCreate()
-  }
 
   private def builder(master: String, shufflePartitions: Int) =
     SparkSession

@@ -31,6 +31,34 @@ object SparkEntry {
   private def emb(s: SparkSession, dir: String) =
     s.read.parquet(s"$dir/embeddings.parquet")
 
+  // ---- clustering-metric inputs (the m_* queries) -------------------------
+  private def customers(s: SparkSession, dir: String) =
+    s.read.parquet(s"$dir/customer.parquet")
+  /** Customers clustered by nation, as `(cid LONG, member)`. */
+  private def byNation(c: DataFrame): DataFrame =
+    c.select(col("c_nationkey").cast("long").as("cid"), col("c_custkey").as("member"))
+  /** One-hot market-segment memberships, as `(nodeId, membership)`. */
+  private def segmentMemberships(c: DataFrame): DataFrame = {
+    val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
+    c.select(col("c_custkey").as("nodeId"),
+      array(segs.map(g => when(col("c_mktsegment") === g, 1.0).otherwise(0.0)): _*)
+        .as("membership"))
+  }
+  /** One-row frame: `metric` rounded to 6 places, in column `name`. */
+  private def metricRow(s: SparkSession, name: String, metric: Double): DataFrame = {
+    val sess = s
+    import sess.implicits._
+    Seq(metric).toDF(name).select(round(col(name), 6).as(name))
+  }
+  /** Query comparing the by-nation and by-segment clusterings of the
+    * customers with `metric`. */
+  private def comparingClusterings(name: String, metric: (DataFrame, DataFrame) => Double)
+      : (SparkSession, String) => DataFrame = (s, dir) => {
+    val c = customers(s, dir)
+    val bySegment = c.select(col("c_mktsegment").as("cid"), col("c_custkey").as("member"))
+    metricRow(s, name, metric(byNation(c), bySegment))
+  }
+
   /** Derived edge tables — deterministic functions of lineitem keys. */
   private[graft] def edgesPR(s: SparkSession, dir: String): DataFrame =
     li(s, dir).select(
@@ -433,96 +461,34 @@ object SparkEntry {
 
     // ---- clustering metrics (J5 + A19) -------------------------------------
     "m_contingency" -> ((s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val c1 = c.select(col("c_nationkey").cast("long").as("cid"),
-        col("c_custkey").as("member"))
+      val c = customers(s, dir)
       val c2 = c.select(
         (col("c_acctbal") > 0).cast("long").as("cid"), col("c_custkey").as("member"))
-      Metrics.contingency(c1, c2)
+      Metrics.contingency(byNation(c), c2)
         .select(col("cid1"), col("cid2"), col("nij"))
     }),
-    "m_nmi" -> ((s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val c1 = c.select(col("c_nationkey").cast("long").as("cid"),
-        col("c_custkey").as("member"))
-      val c2 = c.select(col("c_mktsegment").as("cid"), col("c_custkey").as("member"))
-      val sess = s
-      import sess.implicits._
-      Seq(Metrics.nmi(c1, c2)).toDF("nmi").select(round(col("nmi"), 6).as("nmi"))
-    }),
-    "m_rand_index" -> ((s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val c1 = c.select(col("c_nationkey").cast("long").as("cid"),
-        col("c_custkey").as("member"))
-      val c2 = c.select(col("c_mktsegment").as("cid"), col("c_custkey").as("member"))
-      val sess = s
-      import sess.implicits._
-      Seq(Metrics.randIndex(c1, c2)).toDF("ri")
-        .select(round(col("ri"), 6).as("ri"))
-    }),
+    "m_nmi" -> comparingClusterings("nmi", Metrics.nmi),
+    "m_rand_index" -> comparingClusterings("ri", Metrics.randIndex),
     // CompareByARI (:3338-3400)
-    "m_ari" -> ((s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val c1 = c.select(col("c_nationkey").cast("long").as("cid"),
-        col("c_custkey").as("member"))
-      val c2 = c.select(col("c_mktsegment").as("cid"), col("c_custkey").as("member"))
-      val sess = s
-      import sess.implicits._
-      Seq(Metrics.adjustedRandIndex(c1, c2)).toDF("ari")
-        .select(round(col("ari"), 6).as("ari"))
-    }),
+    "m_ari" -> comparingClusterings("ari", Metrics.adjustedRandIndex),
     // CompareByCPM (:3206-3232) over one-hot memberships, gamma = 0.25 —
     // exact in doubles (counts + quarter multiples), so the oracle compare
     // is bitwise despite float sums
     "m_cpm" -> ((s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-      val memb = c.select(col("c_custkey").as("nodeId"),
-        array(segs.map(g =>
-          when(col("c_mktsegment") === g, 1.0).otherwise(0.0)): _*).as("membership"))
-      val comm = c.select(col("c_nationkey").cast("long").as("cid"),
-        col("c_custkey").as("member"))
-      val sess = s
-      import sess.implicits._
-      Seq(Metrics.cpm(memb, comm, gamma = 0.25)).toDF("cpm")
-        .select(round(col("cpm"), 6).as("cpm"))
+      val c = customers(s, dir)
+      metricRow(s, "cpm", Metrics.cpm(segmentMemberships(c), byNation(c), gamma = 0.25))
     }),
     // ComputeEMI (:3550-3589): hypergeometric expected MI; the oracle
     // recomputes the numCombs probability via lgamma (agrees to ~1e-14,
     // far inside the 6-dp gate)
-    "m_emi" -> ((s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val c1 = c.select(col("c_nationkey").cast("long").as("cid"),
-        col("c_custkey").as("member"))
-      val c2 = c.select(col("c_mktsegment").as("cid"), col("c_custkey").as("member"))
-      val sess = s
-      import sess.implicits._
-      Seq(Metrics.emi(c1, c2)).toDF("emi").select(round(col("emi"), 6).as("emi"))
-    }),
+    "m_emi" -> comparingClusterings("emi", Metrics.emi),
     // CompareByAMI (:3593-3608) = (MI - EMI) / (max(H1,H2) - EMI)
-    "m_ami" -> ((s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val c1 = c.select(col("c_nationkey").cast("long").as("cid"),
-        col("c_custkey").as("member"))
-      val c2 = c.select(col("c_mktsegment").as("cid"), col("c_custkey").as("member"))
-      val sess = s
-      import sess.implicits._
-      Seq(Metrics.ami(c1, c2)).toDF("ami").select(round(col("ami"), 6).as("ami"))
-    }),
+    "m_ami" -> comparingClusterings("ami", Metrics.ami),
     // CompareByModularity (:3135-3202) over one-hot memberships — the O(n·d)
     // algebraic rewrite cross-checked against DuckDB's closed form
     "m_modularity" -> ((s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val segs = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-      val memb = c.select(col("c_custkey").as("nodeId"),
-        array(segs.map(g =>
-          when(col("c_mktsegment") === g, 1.0).otherwise(0.0)): _*).as("membership"))
-      val comm = c.select(col("c_nationkey").cast("long").as("cid"),
-        col("c_custkey").as("member"))
-      val sess = s
-      import sess.implicits._
-      Seq(Metrics.modularity(memb, comm)).toDF("modularity")
-        .select(round(col("modularity"), 6).as("modularity"))
+      val c = customers(s, dir)
+      metricRow(s, "modularity", Metrics.modularity(segmentMemberships(c), byNation(c)))
     }),
     // GetEmergingTopicPublications (:3931-4013). Edges carry a ≥4-year
     // citation lag so the cold→hot shape the scan looks for actually occurs

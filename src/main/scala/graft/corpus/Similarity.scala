@@ -88,10 +88,8 @@ object Similarity {
   }
 
   /** F5/F11 — cosine over dense double-array columns:
-    * dot(a,b) / (||a||·||b||), on the native codegen'd sequential-fold dot
-    * ([[graft.functions.DotProduct]] — bit-identical to the higher-order
-    * `aggregate(zip_with(...))` form it replaces, which was interpreted-only
-    * and allocated a zipped array per evaluated pair). */
+    * dot(a,b) / (||a||·||b||), on the native sequential-fold dot
+    * ([[graft.functions.HashKernels.dot]]). */
   def cosine(a: Column, b: Column): Column = {
     val dot = graft.functions.GraftExpressions.dot _
     dot(a, b) / sqrt(dot(a, a) * dot(b, b))

@@ -2,15 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SQL surface for the native expressions: registers
-  * `graft_fingerprint64(text)`, `graft_simhash64(array<string>)`,
-  * `graft_tokens(text)`, `graft_minhash(text, k, n)`,
-  * `graft_word_ngrams(tokens, n, distinct)`, `graft_normalize(vec)` and
-  * `graft_dot(array<double>, array<double>)` with the session's function
-  * registry, so `spark.sql` users get the same codegen'd kernels the Column
-  * API routes through.
+/** SQL surface for the native functions: injects every entry of
+  * [[GraftExpressions.table]] (`graft_fingerprint64`, `graft_minhash`,
+  * `graft_dot`, …) into the session's function registry, with the same
+  * builder the Column API applies, so `spark.sql` users get the same
+  * codegen'd kernels and the same null and widening contracts.
   *
   * Deployment: `spark.sql.extensions=graft.functions.GraftExtensions` on a
   * cluster (the standard extensions hook), or implicitly via
@@ -20,124 +18,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit =
-    GraftExtensions.registrations.foreach(ext.injectFunction)
-}
-
-object GraftExtensions {
-
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
-  // The SQL builders must apply the SAME edge handling as the Column
-  // wrappers in GraftExpressions — null-coalescing and float-widening
-  // casts — or the SQL surface silently diverges from the Column API
-  // exactly on the edges the wrappers exist for (null text, null token
-  // arrays, array<float> vectors). Built directly in catalyst terms here
-  // (a Column round-trip through the bridge does not survive analysis for
-  // function-builder args); the FunctionsSpec SQL-surface test pins the
-  // two surfaces' edge behavior together.
-  private def coalesceStr(e: Expression): Expression =
-    org.apache.spark.sql.catalyst.expressions.Coalesce(Seq(e,
-      org.apache.spark.sql.catalyst.expressions.Literal(
-        org.apache.spark.unsafe.types.UTF8String.fromString(""),
-        org.apache.spark.sql.types.StringType)))
-
-  private def coalesceStrArray(e: Expression): Expression =
-    org.apache.spark.sql.catalyst.expressions.Coalesce(Seq(e,
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Array.empty[String],
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StringType, containsNull = false))))
-
-  private def castDoubleArray(e: Expression): Expression =
-    org.apache.spark.sql.catalyst.expressions.Cast(e,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType, containsNull = true))
-
-  private def intLit(fn: String, name: String, e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case _ => throw new IllegalArgumentException(
-      s"$fn: $name must be an integer literal, got $e")
-  }
-
-  private def boolLit(fn: String, name: String, e: Expression): Boolean = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Boolean, _) => v
-    case _ => throw new IllegalArgumentException(
-      s"$fn: $name must be a boolean literal, got $e")
-  }
-
-  private def unary(name: String, usage: String, mk: Expression => Expression)
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier(name), info(name, usage), { args =>
-      require(args.length == 1, s"$name expects 1 argument, got ${args.length}")
-      mk(args.head)
-    })
-
-  /** The injectFunction payloads (shared by the extensions hook and tests). */
-  val registrations: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression)] = Seq(
-    unary("graft_fingerprint64",
-      "_FUNC_(text) - 64-bit polynomial rolling hash of the string's UTF-16 code units (null -> null)",
-      Fingerprint64(_)),
-    unary("graft_simhash64",
-      "_FUNC_(tokens) - 64-bit SimHash of an array<string> token column (null -> null)",
-      SimHash64(_)),
-    unary("graft_tokens",
-      "_FUNC_(text) - whitespace tokens (maximal runs of non-\\s characters)",
-      WhitespaceTokens(_)),
-    unary("graft_langid",
-      "_FUNC_(tokens) - heuristic language ID over an array<string> (stopword-hit argmax; 'und' when nothing hits or tokens is null)",
-      // same null → 'und' coalesce as the Column wrapper (file invariant)
-      e => org.apache.spark.sql.catalyst.expressions.Coalesce(Seq(LangId(e),
-        org.apache.spark.sql.catalyst.expressions.Literal(
-          org.apache.spark.unsafe.types.UTF8String.fromString("und"),
-          org.apache.spark.sql.types.StringType)))),
-    (FunctionIdentifier("graft_stophits"),
-      info("graft_stophits",
-        "_FUNC_(tokens, lang) - count of tokens that are stopwords of lang; lang must be a string literal with an embedded list"),
-      { args =>
-        require(args.length == 2,
-          s"graft_stophits expects 2 arguments, got ${args.length}")
-        val lang = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: org.apache.spark.unsafe.types.UTF8String, _) =>
-            v.toString
-          case e => throw new IllegalArgumentException(
-            s"graft_stophits: lang must be a string literal, got $e")
-        }
-        StopHits(args.head, lang)
-      }),
-    unary("graft_normalize",
-      "_FUNC_(vec) - unit-normalize a numeric array to array<double> (ascending sum-of-squares fold, sqrt, per-element divide); fails on a non-empty zero vector",
-      e => NormalizeVec(castDoubleArray(e))),
-    (FunctionIdentifier("graft_word_ngrams"),
-      info("graft_word_ngrams",
-        "_FUNC_(tokens, n, distinct) - word n-grams of an array<string> (space-joined windows of n tokens); n must be an integer literal, distinct a boolean literal"),
-      { args =>
-        require(args.length == 3,
-          s"graft_word_ngrams expects 3 arguments, got ${args.length}")
-        val n = intLit("graft_word_ngrams", "n", args(1))
-        require(n >= 1, s"graft_word_ngrams: n must be >= 1, got $n")
-        WordNgrams(coalesceStrArray(args.head), n,
-          boolLit("graft_word_ngrams", "distinct", args(2)))
-      }),
-    (FunctionIdentifier("graft_minhash"),
-      info("graft_minhash",
-        "_FUNC_(text, shingleK, numHashes) - k-minhash signature (array<bigint>) over distinct shingleK-codepoint windows; shingleK/numHashes must be integer literals"),
-      { args =>
-        require(args.length == 3,
-          s"graft_minhash expects 3 arguments, got ${args.length}")
-        val k = intLit("graft_minhash", "shingleK", args(1))
-        val n = intLit("graft_minhash", "numHashes", args(2))
-        require(k >= 1 && n >= 1,
-          s"graft_minhash: shingleK/numHashes must be >= 1, got $k/$n")
-        MinHashSig(coalesceStr(args.head), k, n)
-      }),
-    (FunctionIdentifier("graft_dot"),
-      info("graft_dot",
-        "_FUNC_(x, y) - sequential ascending-index dot product of two array<double> columns"),
-      { args =>
-        require(args.length == 2, s"graft_dot expects 2 arguments, got ${args.length}")
-        DotProduct(args.head, args(1))
-      })
-  )
+    GraftExpressions.table.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, f.name, f.usage, ""),
+        f.build))
+    }
 }

@@ -3,10 +3,11 @@ package graft.functions
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static scalar kernels behind the native Catalyst expressions in
-  * [[GraftExpressions]]. A top-level Scala object compiles to a mirror class
-  * with static forwarders, so generated Java (Janino) calls these directly —
-  * `graft.functions.HashKernels.polyHash(s)` — with no reflective dispatch.
+/** Static scalar kernels behind the native functions in
+  * [[GraftExpressions.table]]. A top-level Scala object compiles to a mirror
+  * class with static forwarders, so the code Spark's `StaticInvoke`
+  * generates calls these directly — `graft.functions.HashKernels.polyHash(s)`
+  * — with no reflective dispatch.
   *
   * Every kernel is bit-identical to the scalar-UDF form it replaces
   * (spec-asserted in FunctionsSpec, and pinned end-to-end by the driver's
@@ -324,7 +325,7 @@ object HashKernels {
     stopSets.zipWithIndex.map { case ((lang, _), i) => (lang, i) }.toMap
 
   /** True iff `lang` has an embedded stopword list (guards the
-    * [[graft.functions.StopHits]] constructor). */
+    * `graft_stophits` builder in [[GraftExpressions.table]]). */
   def hasStops(lang: String): Boolean = stopLangIdx.contains(lang)
 
   /** Count of tokens (occurrences, duplicates included) that are stopwords

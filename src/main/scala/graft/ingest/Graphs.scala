@@ -40,9 +40,12 @@ object Graphs {
     *   3. two hash joins to encode endpoints,
     *   4. self-loop removal + dedup.
     *
-    * Returns (vertices, edges). At 100 TB the url->vid joins are the big
-    * shuffles; both sides are partitioned by url so AQE handles skew, and
-    * the dictionary is reused (not recomputed) for both endpoints.
+    * Returns (vertices, edges); the dictionary is reused (not recomputed)
+    * for both endpoints. The url->vid joins are the big shuffles, and they
+    * are lazy: they run in the first job that materializes the edges. On
+    * the PageRank path that is [[graft.graph.PageRank.prepare]]'s layout
+    * job, which runs with AQE off, so no runtime skew-join splitting
+    * applies to them there.
     */
   def buildGraph(pages: DataFrame): (DataFrame, DataFrame) = {
     // The extraction UDF (html decode + regex over every page) is the

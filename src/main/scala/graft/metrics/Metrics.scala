@@ -31,8 +31,8 @@ object Metrics {
 
   /** Normalize membership rows to unit vectors (cos = dot thereafter).
     * Same ascending sum-of-squares fold + per-element divide as the
-    * bind-once higher-order form this replaced — the native codegen'd
-    * expression ([[graft.functions.NormalizeVec]], bit-identical,
+    * bind-once higher-order form this replaced — the native kernel
+    * ([[graft.functions.HashKernels.normalizeVec]], bit-identical,
     * FunctionsSpec-pinned; the `array<double>` cast is a no-op here).
     * Pinned end-to-end by the m_modularity / m_cpm oracles. */
   def normalized(memberships: DataFrame): DataFrame =

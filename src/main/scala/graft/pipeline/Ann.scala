@@ -20,20 +20,17 @@ object Ann {
 
   /** Sequential ascending-index dot-product fold (the fixed accumulation
     * order every bit-exact oracle replays with a prepend-0 list_reduce).
-    * Native codegen'd expression ([[graft.functions.DotProduct]]): the
-    * `aggregate(zip_with(...))` higher-order form it replaces is
-    * interpreted-only and allocated a zipped intermediate array per
-    * CANDIDATE PAIR — the dominant per-pair cost in [[lshTopK]] /
-    * [[cosineNearDups]] where pairs >> rows (bit-identical fold,
-    * spec-asserted). */
+    * Native kernel ([[graft.functions.HashKernels.dot]]), evaluated per
+    * CANDIDATE PAIR in [[lshTopK]] / [[cosineNearDups]], where
+    * pairs >> rows (bit-identical fold, spec-asserted). */
   def dot(x: Column, y: Column): Column =
     graft.functions.GraftExpressions.dot(x, y)
 
   /** Normalize a float-vec column to a unit double array ONCE, so cosine
     * of any pair downstream is a single dot product (the reference-style
     * per-pair norm recomputation is O(3d) per pair and was the dominant
-    * cost of the brute-force scorer). Native codegen'd expression
-    * ([[graft.functions.NormalizeVec]]); [[normalizeHof]] is the
+    * cost of the brute-force scorer). Native kernel
+    * ([[graft.functions.HashKernels.normalizeVec]]); [[normalizeHof]] is the
     * reference higher-order form it is spec-asserted bit-identical to. */
   def normalize(vec: Column): Column =
     graft.functions.GraftExpressions.normalize(vec)
@@ -124,7 +121,7 @@ object Ann {
   /** Random-hyperplane LSH signature: `numPlanes` sign bits packed into a
     * LONG. Vectors with equal signatures are near-neighbor candidates.
     * `planeOffset` selects an independent plane family per hash table.
-    * Native codegen'd expression ([[graft.functions.HyperplaneSig]]): one
+    * Native kernel ([[graft.functions.HashKernels.hyperplaneSig]]): one
     * pass computes every projection (primitive arithmetic, one traversal
     * of the vector per plane — the minhashSignature shape) over ArrayData
     * in place; [[hyperplaneSignatureUdf]] is the scalar-UDF reference form

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
 object TextAnalysis {
 
   /** Whitespace tokenizer (split on runs of whitespace, drop empties).
-    * Routed through the native codegen'd expression
-    * ([[graft.functions.WhitespaceTokens]]); [[tokensHof]] is the
+    * Routed through the native kernel
+    * ([[graft.functions.HashKernels.whitespaceTokens]]); [[tokensHof]] is the
     * reference regex/higher-order form it is spec-asserted bit-identical
     * to (and the form every DuckDB oracle replays). */
   def tokens(text: Column): Column =
@@ -84,7 +84,7 @@ object TextAnalysis {
     val toks = tokens(t)
     val nTok = size(toks)
     val nChar = length(t)
-    // native codegen'd counter ([[graft.functions.StopHits]]);
+    // native counter ([[graft.functions.HashKernels.stopHits]]);
     // [[stopHitsHof]] is the reference higher-order chain it is
     // spec-asserted bit-identical to
     val stopHits = graft.functions.GraftExpressions.stopHits(toks, "en")
@@ -129,7 +129,7 @@ object TextAnalysis {
     * tokenizer and n-gram kernels — no shuffle, no UDF, stays in
     * whole-stage codegen. The top-bigram count is the max gram frequency =
     * the longest equal run of the SORTED gram array, computed by the
-    * native [[graft.functions.MaxSortedRun]] kernel (one sort + one linear
+    * native [[graft.functions.HashKernels.maxSortedRun]] kernel (one sort + one linear
     * pass, O(L log L) per row; [[topRunHof]] is the interpreted
     * `aggregate(sort_array(...))` reference fold it is spec-asserted
     * equal to) — the naive count-each-distinct-gram form is O(L²) string
@@ -162,7 +162,7 @@ object TextAnalysis {
 
   /** Reference form of the top-bigram counter — the interpreted
     * `aggregate(sort_array(...))` longest-equal-run fold the native
-    * [[graft.functions.MaxSortedRun]] kernel replaces; kept for the
+    * [[graft.functions.HashKernels.maxSortedRun]] kernel replaces; kept for the
     * FunctionsSpec equality cross-check. */
   private[graft] def topRunHof(b: Column): Column =
     aggregate(
@@ -182,9 +182,8 @@ object TextAnalysis {
     * byte-identical — the exact-dedup key that avoids shuffling full text.
     *
     * Reference form, kept for the FunctionsSpec bit-identity cross-check;
-    * [[fingerprint]] routes through the native codegen'd expression
-    * ([[graft.functions.Fingerprint64]]), which hashes the UTF8String's
-    * bytes in place — no per-row String materialization, no UDF converter. */
+    * [[fingerprint]] routes through the native kernel
+    * ([[graft.functions.HashKernels.polyHash]]). */
   val fingerprintUdf = udf { (s: String) =>
     if (s == null) 0L
     else {
@@ -208,10 +207,9 @@ object TextAnalysis {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Word n-grams as an array column. Routed through the native codegen'd
-    * expression ([[graft.functions.WordNgrams]]) — one `concatWs` per gram,
-    * no interpreted lambda frames; [[wordNgramsHof]] is the reference
-    * higher-order form it is spec-asserted bit-identical to. */
+  /** Word n-grams as an array column. Routed through the native kernel
+    * ([[graft.functions.HashKernels.wordNgrams]]); [[wordNgramsHof]] is the
+    * reference higher-order form it is spec-asserted bit-identical to. */
   def wordNgrams(text: Column, n: Int): Column =
     graft.functions.GraftExpressions.wordNgrams(tokens(text), n)
 

@@ -6,10 +6,11 @@ import graft.SparkSpec
 import graft.pipeline.Dedup
 import graft.text.TextAnalysis
 
-/** Bit-identity of the native Catalyst expressions against the scalar-UDF /
-  * higher-order forms they replace, over adversarial inputs — plus the
-  * codegen assertion (the whole point of the expressions is staying inside
-  * whole-stage codegen with zero per-row allocation).
+/** Bit-identity of the native functions against the scalar-UDF /
+  * higher-order forms they replace, over adversarial inputs; agreement of
+  * their SQL and Column surfaces; and the codegen assertion (the whole
+  * point of the native functions is staying inside whole-stage codegen with
+  * zero per-row allocation).
   */
 class FunctionsSpec extends SparkSpec {
 
@@ -43,6 +44,18 @@ class FunctionsSpec extends SparkSpec {
       s"pre${new String(Character.toChars(cp))}post$i"
     }
     basic ++ fuzz ++ pairs
+  }
+
+  private def messages(t: Throwable): List[String] =
+    if (t == null) Nil else Option(t.getMessage).toList ++ messages(t.getCause)
+
+  /** Asserts that the Column call and the SQL query both fail, each with a
+    * message naming `what`. */
+  private def bothReject(what: String)(column: => Any, sql: String): Unit = {
+    val c = intercept[IllegalArgumentException](column)
+    assert(c.getMessage.contains(what), c.getMessage)
+    val q = intercept[Exception](spark.sql(sql).collect())
+    assert(messages(q).exists(_.contains(what)), q.toString)
   }
 
   test("Fingerprint64 expression is bit-identical to the fingerprint UDF") {
@@ -162,11 +175,10 @@ class FunctionsSpec extends SparkSpec {
       assert(r.getString(2) == r.getString(3),
         s"langId mismatch: ${r.getString(2)} vs ${r.getString(3)} in $r")
     }
-    // unknown language fails loudly at construction, not per row
-    val e = intercept[IllegalArgumentException] {
-      GraftExpressions.stopHits(col("text"), "tlh")
-    }
-    assert(e.getMessage.contains("tlh"), e.getMessage)
+    // an unknown language fails when the call is built, not per row
+    bothReject("tlh")(
+      GraftExpressions.stopHits(col("text"), "tlh"),
+      "SELECT graft_stophits(array('a'), 'tlh')")
   }
 
   test("NormalizeVec expression matches the bind-once HOF normalization bit-for-bit") {
@@ -214,9 +226,7 @@ class FunctionsSpec extends SparkSpec {
     val natErr = intercept[Exception] {
       zdf.select(graft.pipeline.Ann.normalize(col("vec")).as("v")).collect()
     }
-    def rootMessages(t: Throwable): List[String] =
-      if (t == null) Nil else Option(t.getMessage).toList ++ rootMessages(t.getCause)
-    assert(rootMessages(natErr).exists(_.contains("zero vector")), natErr.toString)
+    assert(messages(natErr).exists(_.contains("zero vector")), natErr.toString)
     intercept[Exception] {
       zdf.select(graft.pipeline.Ann.normalizeHof(col("vec")).as("v")).collect()
     }
@@ -301,7 +311,7 @@ class FunctionsSpec extends SparkSpec {
     // stays out of ScalaUDF in the plan
     val plan = df.select(graft.pipeline.Ann.hyperplaneSignature(col("vec"), 8, 0))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("graft_hyperplane_sig") && !plan.contains("ScalaUDF"), plan)
+    assert(plan.contains("HashKernels.hyperplaneSig") && !plan.contains("ScalaUDF"), plan)
   }
 
   test("hyperplaneSig follows its documented plane formula") {
@@ -327,13 +337,18 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("HyperplaneSig rejects numPlanes outside 1..64 however it is built") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val vec = Literal.create(Seq(1.0, -1.0),
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
     Seq(0, 65, -1).foreach { planes =>
-      intercept[IllegalArgumentException](HyperplaneSig(vec, planes, 0))
+      bothReject("numPlanes")(
+        GraftExpressions.hyperplaneSignature(col("vec"), planes, 0),
+        s"SELECT graft_hyperplane_sig(array(1.0d, -1.0d), $planes, 0)")
     }
-    assert(HyperplaneSig(vec, 64, 0).numPlanes == 64)
+    val s = spark
+    import s.implicits._
+    val col64 = Seq(Seq(1.0, -1.0)).toDF("vec")
+      .select(GraftExpressions.hyperplaneSignature(col("vec"), 64, 0)).head().getLong(0)
+    val sql64 = spark.sql("SELECT graft_hyperplane_sig(array(1.0d, -1.0d), 64, 0)")
+      .head().getLong(0)
+    assert(col64 == sql64)
   }
 
   test("MaxSortedRun expression equals the aggregate(sort_array) reference fold") {
@@ -358,7 +373,7 @@ class FunctionsSpec extends SparkSpec {
     }
     val plan = df.select(GraftExpressions.maxSortedRun(col("b")))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("graft_max_sorted_run"), plan)
+    assert(plan.contains("HashKernels.maxSortedRun") && !plan.contains("ScalaUDF"), plan)
   }
 
   test("repetitionSignals: dup/top n-gram fractions on crafted documents") {
@@ -411,8 +426,8 @@ class FunctionsSpec extends SparkSpec {
       spark.sql("SELECT graft_minhash('x', length('abcde'), 4)").collect()
     }
     assert(err.getMessage.contains("integer literal"), err.getMessage)
-    // the SQL surface routes through the SAME Column wrappers, so the
-    // wrappers' edge contracts hold for SQL users too: null text -> the
+    // the SQL surface applies the same table builders as the Column API,
+    // so its edge contracts hold for SQL users too: null text -> the
     // all-Long.MaxValue signature (not null), null token array -> empty
     // gram array (not null), float vectors widen like the Column API
     val edge = spark.sql(
@@ -433,6 +448,73 @@ class FunctionsSpec extends SparkSpec {
     assert(edge.getInt(6) == 3, edge.toString)          // THE + and + the (occurrences)
   }
 
+  test("SQL and Column surfaces agree on every native function") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", IntegerType), StructField("text", StringType),
+      StructField("toks", ArrayType(StringType)),
+      StructField("fvec", ArrayType(FloatType)), StructField("dvec", ArrayType(DoubleType))))
+    // null string/array/vector row, empty row, and a populated row with a
+    // float vector (the `array<double>` widening) and a null token
+    val rows = Seq(
+      Row(0, null, null, null, null),
+      Row(1, "", Seq.empty[String], Seq.empty[Float], Seq.empty[Double]),
+      Row(2, "The cat and the dog 😀", Seq("the", "cat", "and", "the", null),
+        Seq(1.5f, -2.0f, 0.25f), Seq(3.0, 4.0, -1.0)))
+    // an RDD source, so projections run as generated code instead of being
+    // folded into a LocalRelation by the optimizer
+    val in = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    in.createOrReplaceTempView("parity_in")
+    val calls: Seq[(String, org.apache.spark.sql.Column)] = Seq(
+      "graft_fingerprint64(text)" -> GraftExpressions.fingerprint64(col("text")),
+      "graft_simhash64(toks)" -> GraftExpressions.simhash64(col("toks")),
+      "graft_tokens(text)" -> GraftExpressions.whitespaceTokens(col("text")),
+      "graft_minhash(text, 3, 4)" -> GraftExpressions.minhashSignature(col("text"), 3, 4),
+      "graft_word_ngrams(toks, 2, true)" ->
+        GraftExpressions.wordNgrams(col("toks"), 2, distinct = true),
+      "graft_word_ngrams(toks, 1, false)" -> GraftExpressions.wordNgrams(col("toks"), 1),
+      "graft_stophits(toks, 'en')" -> GraftExpressions.stopHits(col("toks"), "en"),
+      "graft_langid(toks)" -> GraftExpressions.langId(col("toks")),
+      "graft_normalize(fvec)" -> GraftExpressions.normalize(col("fvec")),
+      "graft_normalize(dvec)" -> GraftExpressions.normalize(col("dvec")),
+      "graft_dot(fvec, fvec)" -> GraftExpressions.dot(col("fvec"), col("fvec")),
+      "graft_dot(dvec, fvec)" -> GraftExpressions.dot(col("dvec"), col("fvec")),
+      "graft_hyperplane_sig(fvec, 8, 3)" ->
+        GraftExpressions.hyperplaneSignature(col("fvec"), 8, 3),
+      "graft_max_sorted_run(toks)" -> GraftExpressions.maxSortedRun(col("toks")))
+    assert(calls.map(_._1.takeWhile(_ != '(')).toSet ==
+      GraftExpressions.table.map(_.name).toSet)
+    def collect(): (Seq[Row], Seq[Row]) = {
+      val viaSql = spark.sql(calls.map(_._1).zipWithIndex
+        .map { case (c, i) => s"$c AS c$i" }.mkString("SELECT id, ", ", ", " FROM parity_in"))
+      val viaCols = in.select(col("id") +: calls.map(_._2).zipWithIndex
+        .map { case (c, i) => c.as(s"c$i") }: _*)
+      assert(viaSql.schema.map(_.dataType) == viaCols.schema.map(_.dataType))
+      (viaSql.orderBy("id").collect().toSeq, viaCols.orderBy("id").collect().toSeq)
+    }
+    val (sqlGen, colsGen) = collect()
+    assert(sqlGen == colsGen)
+    // the interpreted path (no generated code at all) gives the same values
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val was = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val (sqlInt, colsInt) = collect()
+      assert(sqlInt == colsInt)
+      assert(sqlInt == sqlGen)
+    } finally was.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    // the edge contracts themselves: null text/tokens/vector hash to 0,
+    // float vectors widen instead of failing analysis
+    val nulls = sqlGen.head
+    assert(nulls.getLong(1) == 0L && nulls.getLong(2) == 0L && nulls.getLong(13) == 0L, nulls)
+    assert(sqlGen(2).getDouble(11) == 1.5 * 1.5 + 2.0 * 2.0 + 0.25 * 0.25, sqlGen(2))
+  }
+
   test("native expressions run inside WholeStageCodegen (no ScalaUDF, no interpreted fallback)") {
     // spark.range is a real codegen leaf — a literal local Dataset would be
     // constant-folded into a LocalTableScan before any codegen happens
@@ -441,11 +523,11 @@ class FunctionsSpec extends SparkSpec {
     val fp = base.select(col("text"),
       GraftExpressions.fingerprint64(col("text")).as("fp"))
     val fpPlan = fp.queryExecution.executedPlan.toString
-    assert(fpPlan.contains("graft_fingerprint64"), fpPlan)
+    assert(fpPlan.contains("HashKernels.polyHash"), fpPlan)
     assert(!fpPlan.contains("ScalaUDF"), s"expected no UDF in plan:\n$fpPlan")
     // "*(n)" marks operators fused into a WholeStageCodegen stage; the
     // project evaluating the expression must carry it
-    val projLine = fpPlan.linesIterator.find(_.contains("graft_fingerprint64")).get
+    val projLine = fpPlan.linesIterator.find(_.contains("HashKernels.polyHash")).get
     assert(projLine.trim.startsWith("*("),
       s"expression project not whole-stage-codegen'd:\n$fpPlan")
     // simhash's INPUT is the tokenizer — a higher-order `filter`, which is
@@ -455,18 +537,18 @@ class FunctionsSpec extends SparkSpec {
     val sh = base.select(
       GraftExpressions.simhash64(TextAnalysis.tokens(col("text"))).as("sh"))
     val shPlan = sh.queryExecution.executedPlan.toString
-    assert(shPlan.contains("graft_simhash64"), shPlan)
+    assert(shPlan.contains("HashKernels.simhash"), shPlan)
     assert(!shPlan.contains("ScalaUDF"), s"expected no UDF in plan:\n$shPlan")
     // minhash: string child, no HOF input — must fuse like fingerprint
     val mh = base.select(
       GraftExpressions.minhashSignature(col("text"), 5, 12).as("mh"))
     val mhPlan = mh.queryExecution.executedPlan.toString
-    assert(mhPlan.contains("graft_minhash"), mhPlan)
+    assert(mhPlan.contains("HashKernels.minhashSignature"), mhPlan)
     assert(!mhPlan.contains("ScalaUDF"), s"expected no UDF in plan:\n$mhPlan")
-    val mhLine = mhPlan.linesIterator.find(_.contains("graft_minhash")).get
+    val mhLine = mhPlan.linesIterator.find(_.contains("HashKernels.minhashSignature")).get
     assert(mhLine.trim.startsWith("*("),
       s"minhash project not whole-stage-codegen'd:\n$mhPlan")
-    // force execution so a Janino compile error in doGenCode would surface
+    // force execution so a Janino compile error in the generated call would surface
     assert(fp.count() > 0 && sh.count() > 0 && mh.count() > 0)
   }
 }
