@@ -1,15 +1,24 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.StorageLevel
 
 /** Session factory with the engine's standard configuration.
   *
   * Defaults are sized for the sandbox (local[N], one JVM) but every knob is
   * chosen for cluster semantics: AQE on (runtime skew-join splitting +
   * coalescing), shuffle partitions sized to the parallelism level rather than
-  * the Spark default of 200, UTC timestamps.
+  * the Spark default of 200, UTC timestamps, compressed RDD blocks.
   */
 object GraftSession {
+
+  /** The block format of every link-graph cache and superstep checkpoint:
+    * serialized, spilling to disk, and compressed by the session's
+    * `spark.rdd.compress` (Spark compresses serialized blocks only). A
+    * deserialized cache keeps one JVM object per row; a `(vid, outDeg,
+    * rank)` superstep state takes 5-7x less serialized and compressed, for
+    * the CPU of encoding and decoding each block. */
+  val storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER
 
   def local(cores: Int, shufflePartitions: Int = -1): SparkSession = {
     val sp = if (shufflePartitions > 0) shufflePartitions else math.max(cores, 8)
@@ -42,6 +51,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.rdd.compress", "true") // pairs with storageLevel
       .config("spark.ui.enabled", "false")
       .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
 }

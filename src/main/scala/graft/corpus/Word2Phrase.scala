@@ -1,5 +1,8 @@
 package graft.corpus
 
+import scala.collection.mutable
+
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,13 +23,16 @@ import org.apache.spark.sql.functions._
 object Word2Phrase {
 
   /** One pass: docs `(doc, toks ARRAY<STRING>)` -> same shape with merged
-    * bigram phrases. The accepted-pair dictionary is collected and
-    * broadcast — it is a vocabulary-sized dim table (bounded by distinct
-    * scored bigrams, not by corpus size), the standard broadcast-dim
-    * pattern; the per-doc merge itself stays fully distributed. */
-  def pass(spark: SparkSession, toks: DataFrame, minFreq: Int,
+    * bigram phrases, and the broadcast the lazy output reads. The
+    * accepted-pair dictionary is collected and broadcast — it is a
+    * vocabulary-sized dim table (bounded by distinct scored bigrams, not by
+    * corpus size), the standard broadcast-dim pattern; the per-doc merge
+    * itself stays fully distributed. The caller destroys the broadcast once
+    * the output is materialized. */
+  private[corpus] def pass(spark: SparkSession, toks: DataFrame, minFreq: Int,
       minScore: Double, useV2: Boolean,
-      broadcastPairCeiling: Long = 10L * 1000 * 1000): DataFrame = {
+      broadcastPairCeiling: Long = 10L * 1000 * 1000)
+      : (DataFrame, Broadcast[Set[String]]) = {
     import spark.implicits._
 
     val flat = toks.select(col("doc"), posexplode(col("toks")).as(Seq("pos", "term")))
@@ -72,7 +78,7 @@ object Word2Phrase {
     uni.unpersist(false)
     val pairsB = spark.sparkContext.broadcast(pairs)
 
-    toks.as[(Long, Seq[String])].map { case (doc, ts) =>
+    val merged = toks.as[(Long, Seq[String])].map { case (doc, ts) =>
       val out = Seq.newBuilder[String]
       var i = 0
       while (i < ts.length) {
@@ -83,6 +89,7 @@ object Word2Phrase {
       }
       (doc, out.result())
     }.toDF("doc", "toks")
+    (merged, pairsB)
   }
 
   /** Full recursive word2phrase: `numIters` passes (CitationGraphs.go:298),
@@ -90,11 +97,27 @@ object Word2Phrase {
     * checkpoints every pass's output and releases the pass it replaces. */
   def run(spark: SparkSession, docs: DataFrame, numIters: Int = 2,
       minFreq: Int = 2, minScore: Double = 1e-8, useV2: Boolean = false): DataFrame =
-    graft.graph.Supersteps.iterate(spark,
+    runPasses(spark, docs, numIters, minFreq, minScore, useV2)._1
+
+  /** [[run]], plus the (destroyed) pair broadcast of every pass. */
+  private[corpus] def runPasses(spark: SparkSession, docs: DataFrame,
+      numIters: Int, minFreq: Int, minScore: Double, useV2: Boolean)
+      : (DataFrame, Seq[Broadcast[Set[String]]]) = {
+    val made = mutable.ArrayBuffer.empty[Broadcast[Set[String]]]
+    val out = graft.graph.Supersteps.iterate(spark,
       init = docs.select(col("doc"),
         graft.text.TextAnalysis.tokens(lower(col("text"))).as("toks")),
-      step = (toks, _) => pass(spark, toks, minFreq, minScore, useV2),
+      step = { (toks, _) =>
+        val (merged, pairs) = pass(spark, toks, minFreq, minScore, useV2)
+        made += pairs
+        merged
+      },
       maxIters = numIters,
       checkpointTable = null,
       checkpointEvery = 1).state
+    // with no convergence action the driver checkpoints every pass eagerly,
+    // so no block reads a pair set after iterate returns
+    made.foreach(_.destroy())
+    (out, made.toSeq)
+  }
 }

@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.GraftSession
 
 /** Connected components (north-rule kernel #2), two interchangeable
   * algorithms over the undirected (symmetrized) edge table:
@@ -45,7 +46,8 @@ object ConnectedComponents {
 
   /** The undirected layout [[hashMin]] and [[LabelPropagation]] iterate
     * over: `vertices (vid)` and `edges (src, dst)`, the symmetric non-loop
-    * edges plus ONE self-loop per vertex, all persisted.
+    * edges plus ONE self-loop per vertex, all persisted at
+    * [[graft.GraftSession.storageLevel]].
     *
     * ONE scan of the input feeds the whole setup: the canonical (min,max)
     * edge rows — INCLUDING self-loop rows, so the vertex universe keeps
@@ -64,17 +66,17 @@ object ConnectedComponents {
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(GraftSession.storageLevel)
     val vertices: DataFrame = canon.select(col("src").as("vid"))
       .union(canon.select(col("dst").as("vid"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(GraftSession.storageLevel)
     private val sym0 = canon.where(col("src") =!= col("dst"))
     val edges: DataFrame = sym0
       .union(sym0.select(col("dst").as("src"), col("src").as("dst")))
       .union(vertices.select(col("vid").as("src"), col("vid").as("dst")))
       .repartition(col("src"))
       .sortWithinPartitions("src", "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(GraftSession.storageLevel)
 
     def unpersist(): Unit = { edges.unpersist(); vertices.unpersist(); canon.unpersist() }
   }

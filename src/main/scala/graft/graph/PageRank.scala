@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.GraftSession
 
 /** Distributed PageRank as iterative Dataset joins (north-rule kernel #1).
   *
@@ -15,8 +16,9 @@ import org.apache.spark.storage.StorageLevel
   * one-hop influence to the fixpoint.
   *
   * Scale design:
-  *  - edges stay in the CSR-blocked layout (range-partitioned by `src`,
-  *    sorted within partitions) and are cached once; every superstep's
+  *  - edges stay in the CSR-blocked layout (hash-partitioned by `src`,
+  *    sorted within partitions) and are cached once, serialized and
+  *    compressed at [[graft.GraftSession.storageLevel]]; every superstep's
   *    `edges ⋈ state on src` reuses that partitioning.
   *  - vertex state carries `(vid, outDeg, rank)` so no per-superstep
   *    degree join is needed; the cached `(vid, outDeg)` frame is
@@ -53,7 +55,8 @@ object PageRank {
 
   /** One-off CSR graph layout shared by any number of [[runPrepared]]
     * invocations: edges hash-partitioned by src + sorted within partitions
-    * + cached, and the co-partitioned `(vid, outDeg)` frame. Building this
+    * + cached, and the co-partitioned `(vid, outDeg)` frame, both at
+    * [[graft.GraftSession.storageLevel]]. Building this
     * is ingest work (one repartition shuffle + cache write over |E|), not
     * superstep work — the north-rule metric (supersteps/hour, edges/sec)
     * is steady-state iteration throughput over a prepared graph. */
@@ -81,7 +84,7 @@ object PageRank {
     val e = edges.select(col("src"), col("dst"))
       .repartition(col("src"))
       .sortWithinPartitions("src", "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(GraftSession.storageLevel)
     val outDeg = e.groupBy(col("src").as("vid"))
       .agg(count(lit(1)).as("outDeg"))
     val vertices = e.select(col("src").as("vid"))
@@ -91,7 +94,7 @@ object PageRank {
     // the only per-vertex frame any superstep joins against.
     val vertDeg = vertices.join(outDeg, Seq("vid"), "left")
       .na.fill(0L, Seq("outDeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(GraftSession.storageLevel)
     // one action: |V| and dangler count (dangler-free graphs need no
     // per-superstep dangling-mass action, so their supersteps fuse)
     val firstRow = vertDeg

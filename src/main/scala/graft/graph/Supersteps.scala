@@ -1,8 +1,10 @@
 package graft.graph
 
+import org.apache.spark.GraftCoreBridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
+import graft.GraftSession
 import graft.io.TableIO
 
 /** The superstep driver every iterative kernel runs on ([[PageRank]],
@@ -35,12 +37,16 @@ import graft.io.TableIO
   *    the call returns. `localCheckpoint` blocks are executor-local and die
   *    with their executor; the cadence bounds the recompute an executor loss
   *    costs on a real cluster.
+  *  - '''Storage.''' Every checkpoint, start state included, is stored at
+  *    [[graft.GraftSession.storageLevel]]: serialized and compressed blocks,
+  *    spilling to disk.
   *  - '''Metrics.''' Every manifest records `superstepSecs` (the block's wall
   *    time up to and including its convergence action) and `stepsInBlock`,
   *    plus the kernel's convergence and commit metrics.
   *  - '''Release.''' The state a block replaces is released once the new
-  *    block is materialized, committed and compared against it. The state
-  *    the call returns is never released; it belongs to the caller.
+  *    block is materialized, committed and compared against it, without
+  *    Spark's truncated-lineage warning. The state the call returns is
+  *    never released; it belongs to the caller.
   */
 object Supersteps {
 
@@ -81,7 +87,8 @@ object Supersteps {
       case None => (0, init)
     }
     val cadence = math.max(1, checkpointEvery)
-    var state = start.localCheckpoint(true)
+    val level = GraftSession.storageLevel
+    var state = start.localCheckpoint(true, level)
     var next = startStep // absolute index of the next superstep
     var nextCommit = 0 // relative step of the next cadence point
     var check = Check(converged = false, Map.empty)
@@ -90,7 +97,7 @@ object Supersteps {
       val block = math.min(math.max(1, stepsPerJob), maxIters - next)
       val last = next + block - 1
       val chained = (next to last).foldLeft(beginBlock(state))(step)
-      val newState = chained.localCheckpoint(converged.isEmpty)
+      val newState = chained.localCheckpoint(converged.isEmpty, level)
       converged.foreach(c => check = c(state, newState))
       val secs = (System.nanoTime() - t0) / 1e9
       val rel = last - startStep
@@ -112,7 +119,7 @@ object Supersteps {
   /** Frees a state's checkpoint blocks. `Dataset.unpersist` cannot: a local
     * checkpoint's blocks belong to the RDD under its `LogicalRDD`. */
   private def release(state: DataFrame): Unit = state.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case r: LogicalRDD => GraftCoreBridge.release(r.rdd)
     case _ =>
   }
 }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Exact per-vertex triangle counts (north-rule kernel #4) via the
   * degree-ordered node-iterator: orient each undirected edge from the
   * endpoint with the smaller `(degree, vid)` to the larger, self-join
@@ -15,7 +17,8 @@ import org.apache.spark.sql.functions._
   *
   * Two entry points: [[perVertex]] builds the lazy count frame, [[uncache]]
   * releases what it cached. Cache lifecycle: [[perVertex]] caches the
-  * canonical and oriented edge frames, once each, and must leave them alive
+  * canonical and oriented edge frames, once each, at
+  * [[graft.GraftSession.storageLevel]], and must leave them alive
   * for the caller's action on the returned LAZY frame — so the caller owns
   * release. A resident engine running over many different edge frames calls
   * [[uncache]] per frame when done (one InMemoryRelation pair per distinct
@@ -76,8 +79,8 @@ object Triangles {
     * and one closing semi-join. ONE cached canonical frame feeds both the
     * wedge pipeline and the vertex universe. */
   def perVertex(edges: DataFrame): DataFrame = {
-    val canon = canonical(edges).cache()
-    val o = orient(canon).cache()
+    val canon = canonical(edges).persist(GraftSession.storageLevel)
+    val o = orient(canon).persist(GraftSession.storageLevel)
     def before(d1: Column, v1: Column, d2: Column, v2: Column): Column =
       d1 < d2 || (d1 === d2 && v1 < v2)
     val wedges = o.as("e1")

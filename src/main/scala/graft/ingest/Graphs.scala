@@ -3,6 +3,8 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Vertex dedup + deterministic integer encoding, and edge-table
   * construction with the CSR-blocked layout the iterative kernels consume.
   */
@@ -38,7 +40,7 @@ object Graphs {
     *   1. link extraction (url-level edges),
     *   2. vertex dictionary from the union of all urls seen,
     *   3. two hash joins to encode endpoints,
-    *   4. self-loop removal + dedup.
+    *   4. self-loop removal + dedup inside the `src` layout exchange.
     *
     * Returns (vertices, edges); the dictionary is reused (not recomputed)
     * for both endpoints. The url->vid joins are the big shuffles, and they
@@ -46,6 +48,14 @@ object Graphs {
     * the PageRank path that is [[graft.graph.PageRank.prepare]]'s layout
     * job, which runs with AQE off, so no runtime skew-join splitting
     * applies to them there.
+    *
+    * The dedup runs on the hash(src) partitioning of [[csrLayout]]: that
+    * partitioning already clusters every `(src, dst)` duplicate, so the
+    * `distinct` needs no exchange of its own, and the planner drops the
+    * layout's repartition on top of it as redundant. The encoded edges
+    * cross ONE exchange, keyed on `src`, instead of one on `(src, dst)`
+    * and another on `src`. Both internal caches are at
+    * [[graft.GraftSession.storageLevel]].
     */
   def buildGraph(pages: DataFrame): (DataFrame, DataFrame) = {
     // The extraction UDF (html decode + regex over every page) is the
@@ -56,10 +66,10 @@ object Graphs {
     // [[releaseBuild]] once the returned edge table is materialized
     // (cached by a kernel's prepare, or written out).
     val rawEdges = LinkExtract.linkEdges(pages)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(GraftSession.storageLevel)
     val urls = pages.select(col("url"))
       .union(rawEdges.select(col("dst_url").as("url")))
-    val vertices = encodeVertices(urls).cache()
+    val vertices = encodeVertices(urls).persist(GraftSession.storageLevel)
     val e1 = rawEdges
       .join(vertices.withColumnRenamed("url", "src_url")
         .withColumnRenamed("vid", "src"), "src_url")
@@ -67,6 +77,7 @@ object Graphs {
         .withColumnRenamed("vid", "dst"), "dst_url")
       .select("src", "dst")
       .where(col("src") =!= col("dst"))
+      .repartition(pages.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
       .distinct()
     (vertices, csrLayout(e1))
   }

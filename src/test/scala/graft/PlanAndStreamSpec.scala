@@ -109,6 +109,26 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("buildGraph |> prepare dedups the encoded edges inside ONE src exchange") {
+    val pages = Pages.synthesize(spark, 2000, 42L, 8)
+    val (vertices, edges) = graft.ingest.Graphs.buildGraph(pages)
+    val g = PageRank.prepare(spark, edges)
+    try {
+      // the cached layout's plan is the whole prepare job: the url joins
+      // exchange on urls, every exchange of the encoded edges keys on vids
+      val plan = g.edges.queryExecution.executedPlan.toString
+      val edgeExchanges = plan.linesIterator
+        .filter(_.matches(""".*Exchange hashpartitioning\((src|dst)#.*""")).toSeq
+      assert(edgeExchanges.size == 1, plan)
+      assert(edgeExchanges.head.contains("hashpartitioning(src#"), plan)
+      assert(!plan.matches("""(?s).*hashpartitioning\(src#\d+L?, dst#.*"""), plan)
+    } finally {
+      g.unpersist()
+      vertices.unpersist()
+      graft.ingest.Graphs.releaseBuild(pages)
+    }
+  }
+
   test("triangles perVertex reuses ONE cached canonical edge frame") {
     import graft.graph.Triangles
     val pages = Pages.synthesize(spark, 1000, 7L, 4)

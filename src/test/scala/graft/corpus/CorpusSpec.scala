@@ -97,6 +97,23 @@ class CorpusSpec extends SparkSpec {
     assert(!toks(0L).contains("new"))
   }
 
+  test("word2phrase destroys every pass's pair broadcast, output unchanged") {
+    val planted = (0 until 20).map(i => (i.toLong, s"new york city item$i"))
+      .toDF("doc", "text")
+    val (out, pairs) = Word2Phrase.runPasses(spark, planted, numIters = 2,
+      minFreq = 2, minScore = 0.0, useV2 = false)
+    assert(pairs.size == 2)
+    pairs.foreach { b =>
+      val e = intercept[org.apache.spark.SparkException](b.value)
+      assert(e.getMessage.contains("destroyed"), e.getMessage)
+    }
+    // the checkpointed output no longer reads the pair sets
+    val toks = out.as[(Long, Seq[String])].collect().toMap
+    assert(toks == (0 until 20).map(i => i.toLong -> Seq("new_york_city", s"item$i")).toMap)
+    assert(Word2Phrase.run(spark, planted, numIters = 2, minFreq = 2, minScore = 0.0)
+      .as[(Long, Seq[String])].collect().toMap == toks)
+  }
+
   test("similarity kernels: jaccard bounded, simRanks dense per phrase") {
     val (bow, _) = Corpus.build(docs)
     val cooc = Corpus.concurrences(bow)

@@ -2,9 +2,16 @@ package graft.graph
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkSpec
 
@@ -298,6 +305,99 @@ class GraphKernelsSpec extends SparkSpec {
       // only the returned state's checkpoint outlives the call
       assert(short <= 1 && long <= 1,
         s"$name leaves $short persistent RDDs after 1 step, $long after 6")
+    }
+  }
+
+  test("releasing replaced superstep state logs no truncated-lineage WARN") {
+    val sc = spark.sparkContext
+    // capture WARN events of every org.apache.spark.rdd logger (RDD logs
+    // under its concrete class's name) without passing them to the console
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("rdd-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val name = "org.apache.spark.rdd"
+    assert(!ctx.getConfiguration.getLoggers.containsKey(name))
+    val logger = new LoggerConfig(name, Level.WARN, false)
+    logger.addAppender(appender, Level.WARN, null)
+    ctx.getConfiguration.addLogger(name, logger)
+    ctx.updateLoggers()
+    def truncated: Int = seen.toArray.count(_.toString.contains("locally checkpointed"))
+    try {
+      // control: RDD.unpersist on a local checkpoint does log the warning
+      val control = sc.parallelize(1 to 10, 2).localCheckpoint()
+      control.count()
+      control.unpersist()
+      assert(truncated == 1, s"capture saw ${seen.toArray.mkString("; ")}")
+      // a 6-step PageRank releases its start state and 5 replaced states
+      val r = PageRank.run(spark, edgeDF(Referee.zipf(200, 800, 5L)),
+        maxIters = 6, tol = -1.0)
+      assert(r.supersteps == 6)
+      assert(truncated == 1,
+        s"release logged: ${seen.toArray.mkString("; ")}")
+    } finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
+  test("every link-graph cache and superstep checkpoint is stored serialized") {
+    import graft.ingest.{Graphs, Pages}
+    val sc = spark.sparkContext
+    assert(sc.getConf.get("spark.rdd.compress") == "true")
+    // level of every RDD block written, by RDD id: hashMin's and LP's
+    // caches are released before they return, so their blocks are checked
+    // as they are written
+    val written = new java.util.concurrent.ConcurrentHashMap[Int, StorageLevel]()
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+        val b = e.blockUpdatedInfo
+        if (b.storageLevel.isValid) b.blockId.asRDDId.foreach { id =>
+          if (b.storageLevel.deserialized || !written.containsKey(id.rddId))
+            written.put(id.rddId, b.storageLevel)
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    val before = sc.getPersistentRDDs.keySet
+    val pages = Pages.synthesize(spark, 1000, 7L, 4)
+    val (vertices, edges) = Graphs.buildGraph(pages)
+    val g = PageRank.prepare(spark, edges)
+    try {
+      val ranks = PageRank.runPrepared(spark, g, maxIters = 3, tol = -1.0).ranks
+      assert(ranks.count() == g.n)
+      assert(Triangles.perVertex(edges).where(col("triangles") > 0).count() > 0)
+      // alive: buildGraph's caches, the layout, the returned ranks'
+      // checkpoint, the triangle caches
+      val alive = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      assert(alive.size >= 7, s"persistent RDDs: $alive")
+      alive.foreach { case (id, rdd) =>
+        assert(!rdd.getStorageLevel.deserialized, s"RDD $id at ${rdd.getStorageLevel}")
+      }
+      assert(ConnectedComponents.hashMin(spark, edges).count() == g.n)
+      assert(LabelPropagation.run(spark, edges, numIters = 3).count() == g.n)
+      // block updates reach the listener in order: once a marker RDD's
+      // block is seen, every earlier block has been
+      val marker = sc.parallelize(Seq(1), 1).persist(StorageLevel.MEMORY_ONLY)
+      marker.count()
+      eventually(timeout(30.seconds)) { assert(written.containsKey(marker.id)) }
+      marker.unpersist()
+      written.remove(marker.id)
+      assert(written.size > alive.size, s"blocks written: $written")
+      written.forEach { (id, level) =>
+        assert(!level.deserialized, s"RDD $id wrote a block at $level")
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      Triangles.uncache(edges)
+      g.unpersist()
+      vertices.unpersist()
+      Graphs.releaseBuild(pages)
     }
   }
 
