@@ -30,12 +30,15 @@ object GraftSession {
     * sandbox stand-in for an n-executor cluster, used for the N-vs-4N
     * scaling evidence. Executors get this JVM's own class path as
     * `spark.executor.extraClassPath`, so they load the application classes
-    * from wherever the driver does (no jar packaging needed locally). */
+    * from wherever the driver does (no jar packaging needed locally), and
+    * this JVM's Scala version, which the executor launcher needs. */
   def localCluster(workers: Int, coresPerWorker: Int, memMB: Int,
       shufflePartitions: Int = 32): SparkSession =
     builder(s"local-cluster[$workers,$coresPerWorker,$memMB]", shufflePartitions)
       .config("spark.executor.memory", s"${memMB}m")
       .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
+      .config("spark.executorEnv.SPARK_SCALA_VERSION",
+        scala.util.Properties.versionNumberString.split('.').take(2).mkString("."))
       .getOrCreate()
 
   private def builder(master: String, shufflePartitions: Int) =

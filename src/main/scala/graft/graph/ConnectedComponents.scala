@@ -60,7 +60,9 @@ object ConnectedComponents {
     * clustering on src. The self-loops feed each vertex its own state
     * through the same aggregate that feeds it the neighbors' (single-use
     * state — see [[hashMin]]), at +|V| rows on 2|E|. Genuine self-edges are
-    * dropped, so `src = dst` identifies the added loops exactly. */
+    * dropped, so `src = dst` identifies the added loops exactly. Like
+    * [[PageRank.prepare]]'s layout it is built with AQE off, so the cached
+    * edges keep their `src` partitioning and no superstep re-shuffles them. */
   private[graph] final class Undirected(input: DataFrame) {
     private val canon = input
       .select(least(col("src"), col("dst")).as("src"),
@@ -98,12 +100,7 @@ object ConnectedComponents {
     * aggregate, the edge side is cached pre-partitioned on src, and only
     * the `groupBy(dst)` shuffles. The block-end changed-count is the
     * driver's convergence action, so it materializes the block in the same
-    * job (one action per block, not two). AQE stays ON (unlike
-    * [[PageRank.run]], which must keep a vertDeg frame co-partitioned
-    * across supersteps): here each superstep's state
-    * partitioning is derived fresh, so AQE's runtime broadcast of a
-    * shrunken state side / small-stage coalescing are pure wins at low
-    * scale and no-ops at web scale. */
+    * job (one action per block, not two). */
   def hashMin(
       spark: SparkSession,
       edges: DataFrame,
@@ -111,7 +108,7 @@ object ConnectedComponents {
       checkpointTable: String = null,
       checkpointEvery: Int = 1,
       stepsPerJob: Int = 1): DataFrame = {
-    val g = new Undirected(edges)
+    val g = Supersteps.withoutAqe(spark)(new Undirected(edges))
 
     // one chained superstep over (vid, component, prev): candidate = min
     // over in-neighbors ∪ self (the self-loop row); `prev` (the block-start

@@ -20,8 +20,7 @@ import org.apache.spark.sql.functions._
   * The per-vertex mode is computed as `groupBy(vid, label)` vote counts
   * (self-loops vote with weight 0 — see [[run]]) followed by a
   * `row_number` window ordered `(count DESC, label ASC)`; no driver-side
-  * state, no join-back to the state frame. AQE stays on — see
-  * [[ConnectedComponents.hashMin]].
+  * state, no join-back to the state frame.
   */
 object LabelPropagation {
 
@@ -43,7 +42,7 @@ object LabelPropagation {
       checkpointTable: String = null,
       checkpointEvery: Int = 1,
       stepsPerJob: Int = 1): DataFrame = {
-    val g = new ConnectedComponents.Undirected(edges)
+    val g = Supersteps.withoutAqe(spark)(new ConnectedComponents.Undirected(edges))
 
     // seeds are aligned to the graph's vertex set: unlabeled vertices start
     // at their own vid, seed rows for vids outside the graph are dropped

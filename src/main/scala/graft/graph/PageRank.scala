@@ -68,45 +68,38 @@ object PageRank {
     def unpersist(): Unit = { edges.unpersist(); vertDeg.unpersist() }
   }
 
-  def prepare(spark: SparkSession, edges: DataFrame): PreparedGraph = {
-    // AQE off for the layout too: AQE may coalesce REPARTITION_BY_COL, and
-    // the layout's partition count IS the superstep parallelism (and the
-    // partitioning every superstep join reuses) — it must be exactly
-    // spark.sql.shuffle.partitions, decided by the engine, not re-derived
-    // from small-sample sizes at runtime.
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try prepareInternal(spark, edges)
-    finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-  }
-
-  private def prepareInternal(spark: SparkSession, edges: DataFrame): PreparedGraph = {
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .sortWithinPartitions("src", "dst")
-      .persist(GraftSession.storageLevel)
-    val outDeg = e.groupBy(col("src").as("vid"))
-      .agg(count(lit(1)).as("outDeg"))
-    val vertices = e.select(col("src").as("vid"))
-      .union(e.select(col("dst").as("vid"))).distinct()
-    // (vid, outDeg) co-partitioned with every groupBy(vid) aggregate;
-    // outDeg 0 marks dangling vertices. Cached for the whole run — this is
-    // the only per-vertex frame any superstep joins against.
-    val vertDeg = vertices.join(outDeg, Seq("vid"), "left")
-      .na.fill(0L, Seq("outDeg"))
-      .persist(GraftSession.storageLevel)
-    // one action: |V| and dangler count (dangler-free graphs need no
-    // per-superstep dangling-mass action, so their supersteps fuse)
-    val firstRow = vertDeg
-      .agg(count(lit(1)), sum(when(col("outDeg") === 0, 1L).otherwise(0L)))
-      .head()
-    PreparedGraph(e, vertDeg, firstRow.getLong(0), firstRow.getLong(1) > 0L)
-  }
+  /** The layout is built with AQE off ([[Supersteps.withoutAqe]]): AQE may
+    * coalesce the `src` repartition, and the layout's partition count is
+    * the superstep parallelism and the partitioning every superstep join
+    * reuses, so it must be exactly `spark.sql.shuffle.partitions`. */
+  def prepare(spark: SparkSession, edges: DataFrame): PreparedGraph =
+    Supersteps.withoutAqe(spark) {
+      val e = edges.select(col("src"), col("dst"))
+        .repartition(col("src"))
+        .sortWithinPartitions("src", "dst")
+        .persist(GraftSession.storageLevel)
+      val outDeg = e.groupBy(col("src").as("vid"))
+        .agg(count(lit(1)).as("outDeg"))
+      val vertices = e.select(col("src").as("vid"))
+        .union(e.select(col("dst").as("vid"))).distinct()
+      // (vid, outDeg) co-partitioned with every groupBy(vid) aggregate;
+      // outDeg 0 marks dangling vertices. Cached for the whole run — this is
+      // the only per-vertex frame any superstep joins against.
+      val vertDeg = vertices.join(outDeg, Seq("vid"), "left")
+        .na.fill(0L, Seq("outDeg"))
+        .persist(GraftSession.storageLevel)
+      // one action: |V| and dangler count (dangler-free graphs need no
+      // per-superstep dangling-mass action, so their supersteps fuse)
+      val firstRow = vertDeg
+        .agg(count(lit(1)), sum(when(col("outDeg") === 0, 1L).otherwise(0L)))
+        .head()
+      PreparedGraph(e, vertDeg, firstRow.getLong(0), firstRow.getLong(1) > 0L)
+    }
 
   /** @param checkpointTable TableIO table for superstep snapshots;
     *                        null/empty disables checkpointing.
-    * `stepsPerJob`, `checkpointEvery` and resume follow the [[Supersteps]]
-    * contract, except that a graph with dangling vertices runs one
+    * `stepsPerJob`, `checkpointEvery`, resume and the plan policy follow
+    * the [[Supersteps]] contract, except that a graph with dangling vertices runs one
     * superstep per block whatever `stepsPerJob` says: each of its
     * supersteps reads the dangling mass of its materialized input state. */
   def run(
@@ -119,13 +112,6 @@ object PageRank {
       kahan: Boolean = false,
       stepsPerJob: Int = 1,
       checkpointEvery: Int = 1): Result = {
-
-    // AQE is scoped OFF for the kernel's internal queries: it coalesces the
-    // contribution exchange at small sizes, breaking the co-partitioning
-    // with the cached (vid, outDeg) frame that the rank-update join and the
-    // next superstep's edge join rely on. Nothing AQE offers applies here:
-    // partition counts are hand-sized, skew is handled by salting, and no
-    // superstep join is broadcastable at web scale.
     val g = prepare(spark, edges)
     try runPrepared(spark, g, damping, tol, maxIters, checkpointTable,
       kahan, stepsPerJob, checkpointEvery)
@@ -133,8 +119,7 @@ object PageRank {
   }
 
   /** Iterate over a [[prepare]]d graph (steady-state superstep path; the
-    * graph layout is reused across invocations and never unpersisted here).
-    * AQE is scoped OFF for the kernel's internal queries — see [[run]]. */
+    * graph layout is reused across invocations and never unpersisted here). */
   def runPrepared(
       spark: SparkSession,
       g: PreparedGraph,
@@ -145,24 +130,6 @@ object PageRank {
       kahan: Boolean = false,
       stepsPerJob: Int = 1,
       checkpointEvery: Int = 1): Result = {
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try runInternal(spark, g, damping, tol, maxIters, checkpointTable,
-      kahan, stepsPerJob, checkpointEvery)
-    finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-  }
-
-  private def runInternal(
-      spark: SparkSession,
-      g: PreparedGraph,
-      damping: Double,
-      tol: Double,
-      maxIters: Int,
-      checkpointTable: String,
-      kahan: Boolean,
-      stepsPerJob: Int,
-      checkpointEvery: Int): Result = {
-
     val e = g.edges
     val vertDeg = g.vertDeg
     val n = g.n

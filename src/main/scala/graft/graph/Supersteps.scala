@@ -43,10 +43,17 @@ import graft.io.TableIO
   *  - '''Metrics.''' Every manifest records `superstepSecs` (the block's wall
   *    time up to and including its convergence action) and `stepsInBlock`,
   *    plus the kernel's convergence and commit metrics.
+  *  - '''Plan.''' The whole loop, from the start-state checkpoint to the
+  *    last commit, runs with AQE off, restored after the call. A graph
+  *    superstep's parallelism is its layout's partition count, and it joins
+  *    a state co-partitioned with that layout. AQE submits a job per query
+  *    stage, and on `undirected_kernels` it coalesced every hash-min
+  *    superstep after the first to ONE task.
   *  - '''Release.''' The state a block replaces is released once the new
   *    block is materialized, committed and compared against it, without
   *    Spark's truncated-lineage warning. The state the call returns is
-  *    never released; it belongs to the caller.
+  *    never released; it belongs to the caller. When a step, convergence
+  *    action or commit throws, the states the call holds are released first.
   */
 object Supersteps {
 
@@ -80,40 +87,59 @@ object Supersteps {
       snapshot: DataFrame => DataFrame = identity,
       beginBlock: DataFrame => DataFrame = identity,
       converged: Option[(DataFrame, DataFrame) => Check] = None,
-      commitMetrics: DataFrame => Map[String, Double] = _ => Map.empty): Result = {
-    val table = Option(checkpointTable).filter(_.nonEmpty)
-    val (startStep, start) = table.flatMap(TableIO.read(spark, _)) match {
-      case Some((meta, rows)) => (meta.step.toInt + 1, resume(rows))
-      case None => (0, init)
-    }
-    val cadence = math.max(1, checkpointEvery)
-    val level = GraftSession.storageLevel
-    var state = start.localCheckpoint(true, level)
-    var next = startStep // absolute index of the next superstep
-    var nextCommit = 0 // relative step of the next cadence point
-    var check = Check(converged = false, Map.empty)
-    while (next < maxIters && !check.converged) {
-      val t0 = System.nanoTime()
-      val block = math.min(math.max(1, stepsPerJob), maxIters - next)
-      val last = next + block - 1
-      val chained = (next to last).foldLeft(beginBlock(state))(step)
-      val newState = chained.localCheckpoint(converged.isEmpty, level)
-      converged.foreach(c => check = c(state, newState))
-      val secs = (System.nanoTime() - t0) / 1e9
-      val rel = last - startStep
-      table.foreach { t =>
-        if (rel >= nextCommit || check.converged || last == maxIters - 1) {
-          TableIO.commit(snapshot(newState), t, last,
-            check.metrics ++ commitMetrics(newState) ++
-              Map("superstepSecs" -> secs, "stepsInBlock" -> block.toDouble))
-          nextCommit = (rel / cadence + 1) * cadence
-        }
+      commitMetrics: DataFrame => Map[String, Double] = _ => Map.empty): Result =
+    withoutAqe(spark) {
+      val table = Option(checkpointTable).filter(_.nonEmpty)
+      val (startStep, start) = table.flatMap(TableIO.read(spark, _)) match {
+        case Some((meta, rows)) => (meta.step.toInt + 1, resume(rows))
+        case None => (0, init)
       }
-      release(state)
-      state = newState
-      next = last + 1
+      val cadence = math.max(1, checkpointEvery)
+      val level = GraftSession.storageLevel
+      var state: DataFrame = null // the checkpoints this call holds
+      var newState: DataFrame = null
+      try {
+        state = start.localCheckpoint(true, level)
+        var next = startStep // absolute index of the next superstep
+        var nextCommit = 0 // relative step of the next cadence point
+        var check = Check(converged = false, Map.empty)
+        while (next < maxIters && !check.converged) {
+          val t0 = System.nanoTime()
+          val block = math.min(math.max(1, stepsPerJob), maxIters - next)
+          val last = next + block - 1
+          val chained = (next to last).foldLeft(beginBlock(state))(step)
+          newState = chained.localCheckpoint(converged.isEmpty, level)
+          converged.foreach(c => check = c(state, newState))
+          val secs = (System.nanoTime() - t0) / 1e9
+          val rel = last - startStep
+          table.foreach { t =>
+            if (rel >= nextCommit || check.converged || last == maxIters - 1) {
+              TableIO.commit(snapshot(newState), t, last,
+                check.metrics ++ commitMetrics(newState) ++
+                  Map("superstepSecs" -> secs, "stepsInBlock" -> block.toDouble))
+              nextCommit = (rel / cadence + 1) * cadence
+            }
+          }
+          release(state)
+          state = newState
+          next = last + 1
+        }
+        Result(snapshot(state), next, check.metrics)
+      } catch {
+        case e: Throwable =>
+          Seq(state, newState).filter(_ != null).foreach(release)
+          throw e
+      }
     }
-    Result(snapshot(state), next, check.metrics)
+
+  /** Runs `body` with AQE off, then restores the session's setting: the
+    * superstep plan policy, also applied to the layouts supersteps reuse. */
+  private[graft] def withoutAqe[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try body
+    finally spark.conf.set(key, was)
   }
 
   /** Frees a state's checkpoint blocks. `Dataset.unpersist` cannot: a local

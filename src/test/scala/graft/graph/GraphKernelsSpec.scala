@@ -514,36 +514,138 @@ class GraphKernelsSpec extends SparkSpec {
   }
 
   test("CC superstep fusion actually cuts Spark jobs (changed-count folded)") {
-    // AQE scoped off HERE so one action = one job (AQE submits a job per
-    // query stage, which would hide the driver-side action count this test
-    // measures; the kernels themselves run with AQE on)
+    // a call runs the same setup jobs whatever its block size, plus ONE job
+    // per block: the changed-count (CC) or the eager checkpoint (LP)
+    // materializes the block. That holds exactly with broadcast joins off,
+    // as at web scale. On these tiny fixtures Spark's default threshold
+    // also broadcasts a join side, in jobs of their own that depend on which
+    // side it picks, so there fusion must only cut jobs
     val sc = spark.sparkContext
-    val edges = Referee.zipf(300, 1200, 21L)
     def jobsOf(group: String)(body: => Unit): Int = {
       sc.setJobGroup(group, group)
       try body finally sc.clearJobGroup()
       sc.statusTracker.getJobIdsForGroup(group).length
     }
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // hash-min changes labels for `depth` supersteps; a block of k steps
+    // that changes none ends the run
+    val depth = Referee.labelDepth(Referee.chain10)
+    assert(depth == 9)
+    val ccSteps = Seq(1, 2, 4)
+    val ccBlocks = ccSteps.map(k => (depth - 1) / k + 2)
+    val lpSteps = Seq(1, 2, 3)
+    val lpBlocks = lpSteps.map(6 / _)
+    def jobs(tag: String): (Seq[Int], Seq[Int]) = (
+      ccSteps.map { k =>
+        jobsOf(s"cc_${tag}_spj$k") {
+          ConnectedComponents.hashMin(spark, edgeDF(Referee.chain10), stepsPerJob = k)
+            .count()
+        }
+      },
+      lpSteps.map { k =>
+        jobsOf(s"lp_${tag}_spj$k") {
+          LabelPropagation.run(spark, edgeDF(Referee.zipf(300, 1200, 21L)),
+            numIters = 6, stepsPerJob = k).count()
+        }
+      })
+    val (cc, lp) = jobs("default")
+    assert(cc.sliding(2).forall(p => p(1) < p(0)), s"CC jobs by block size: $cc")
+    assert(lp.sliding(2).forall(p => p(1) < p(0)), s"LP jobs by block size: $lp")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val default = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    val (ccNb, lpNb) = try jobs("nobroadcast") finally spark.conf.set(key, default)
+    assert(ccNb.zip(ccBlocks).map(p => p._1 - p._2).distinct.size == 1,
+      s"CC jobs $ccNb for $ccBlocks blocks")
+    assert(lpNb.zip(lpBlocks).map(p => p._1 - p._2).distinct.size == 1,
+      s"LP jobs $lpNb for $lpBlocks blocks")
+  }
+
+  test("a fused hash-min block runs one exchange per superstep, on dst") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // the physical plan of every block: the chain its checkpoint runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // no broadcast joins, which web-scale sizes rule out (PlanAudit's
+    // NOBROADCAST mode): the plan is the partitioned one
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    spark.listenerManager.register(listener)
     try {
-      val unfused = jobsOf("cc_unfused") {
-        ConnectedComponents.hashMin(spark, edgeDF(edges)).count()
+      val edges = Referee.zipf(300, 1200, 21L)
+      val k = 3
+      val blocks = (Referee.labelDepth(edges) - 1) / k + 2
+      ConnectedComponents.hashMin(spark, edgeDF(edges), stepsPerJob = k).count()
+      def blockPlans = plans.toArray(Array.empty[SparkPlan]).toSeq
+        .filter(_.exists(_.isInstanceOf[SortMergeJoinExec]))
+      eventually(timeout(30.seconds)) { assert(blockPlans.size == blocks) }
+      assert(blocks >= 2)
+      blockPlans.zipWithIndex.foreach { case (plan, b) =>
+        val keys = plan.collect { case e: ShuffleExchangeExec =>
+          e.outputPartitioning match {
+            case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+            case other => Seq(other.toString)
+          }
+        }
+        // the min-label aggregate of each superstep, plus at most one
+        // exchange of the block's start state
+        assert(keys.count(_ == Seq("dst")) == k, s"block $b exchanges on $keys")
+        assert(keys.size <= k + 1, s"block $b exchanges on $keys")
+        // each superstep's join reads its edge side straight off the cache
+        val joins = plan.collect { case j: SortMergeJoinExec => j }
+        assert(joins.size == k)
+        joins.foreach { j =>
+          assert(j.children.exists { side =>
+            side.exists(_.isInstanceOf[InMemoryTableScanExec]) &&
+              !side.exists(_.isInstanceOf[ShuffleExchangeExec])
+          }, s"block $b re-shuffles the cached edges:\n$j")
+        }
       }
-      val fused = jobsOf("cc_fused") {
-        ConnectedComponents.hashMin(spark, edgeDF(edges), stepsPerJob = 4).count()
-      }
-      assert(fused < unfused,
-        s"stepsPerJob=4 should run fewer jobs ($fused) than unfused ($unfused)")
-      val lpUnfused = jobsOf("lp_unfused") {
-        LabelPropagation.run(spark, edgeDF(edges), numIters = 6).count()
-      }
-      val lpFused = jobsOf("lp_fused") {
-        LabelPropagation.run(spark, edgeDF(edges), numIters = 6, stepsPerJob = 3).count()
-      }
-      assert(lpFused < lpUnfused,
-        s"LP stepsPerJob=3 should run fewer jobs ($lpFused) than unfused ($lpUnfused)")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set(key, was)
+    }
+  }
+
+  test("a superstep that throws releases its checkpoints and restores AQE") {
+    val sc = spark.sparkContext
+    val key = "spark.sql.adaptive.enabled"
+    val aqe = spark.conf.get(key)
+    val start = (0L until 20L).toDF("vid").withColumn("x", lit(0L))
+    def step(st: DataFrame, i: Int): DataFrame = st.withColumn("x", lit(i + 1L))
+    def boom(what: String) = throw new IllegalStateException(what)
+    // each call fails at step 2, fused or not: its step, its convergence
+    // action or its commit throws
+    val failures: Seq[(String, Int => Supersteps.Result)] = Seq(
+      "step" -> (k => Supersteps.iterate(spark, start,
+        (st, i) => if (i == 2) boom("step") else step(st, i), 5, null, 1,
+        stepsPerJob = k)),
+      "convergence action" -> (k => Supersteps.iterate(spark, start, step, 5,
+        null, 1, stepsPerJob = k,
+        converged = Some((_, next) =>
+          if (next.agg(max("x")).head().getLong(0) > 2) boom("convergence action")
+          else Supersteps.Check(converged = false, Map.empty)))),
+      "commit" -> (k => Supersteps.iterate(spark, start, step, 5,
+        tmpDir("failed_commit"), 1, stepsPerJob = k,
+        commitMetrics = st =>
+          if (st.agg(max("x")).head().getLong(0) > 2) boom("commit") else Map.empty)))
+    for ((what, run) <- failures; k <- Seq(1, 2)) {
+      val before = sc.getPersistentRDDs.keySet
+      val e = intercept[IllegalStateException](run(k))
+      assert(e.getMessage == what)
+      assert(spark.conf.get(key) == aqe, s"$what, stepsPerJob=$k")
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$what, stepsPerJob=$k leaves RDDs $left")
+    }
   }
 
   test("fused CC/LP + checkpointing: block-boundary commits, final durable") {

@@ -63,6 +63,29 @@ object Referee {
     comp.toMap
   }
 
+  /** Supersteps in which hash-min changes some label: the largest hop
+    * distance from a vertex to its component's minimum. */
+  def labelDepth(edges: Seq[(Long, Long)]): Int = {
+    val adj = edges.filter { case (a, b) => a != b }
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2)
+    val dist = mutable.Map.empty[Long, Int]
+    // BFS from each component's minimum: vertices in ascending order
+    adj.keys.toSeq.sorted.foreach { v =>
+      if (!dist.contains(v)) {
+        dist(v) = 0
+        val queue = mutable.Queue(v)
+        while (queue.nonEmpty) {
+          val x = queue.dequeue()
+          adj(x).foreach { y =>
+            if (!dist.contains(y)) { dist(y) = dist(x) + 1; queue.enqueue(y) }
+          }
+        }
+      }
+    }
+    dist.values.foldLeft(0)(math.max)
+  }
+
   /** Synchronous label propagation, ties -> min label, fixed iterations. */
   def labelProp(edges: Seq[(Long, Long)], numIters: Int): Map[Long, Long] = {
     val adj = mutable.Map.empty[Long, mutable.Set[Long]]
