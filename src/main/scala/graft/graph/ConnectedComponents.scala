@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
+import graft.ingest.Graphs
 
 /** Connected components (north-rule kernel #2), two interchangeable
   * algorithms over the undirected (symmetrized) edge table:
@@ -25,62 +26,55 @@ import graft.GraftSession
   */
 object ConnectedComponents {
 
-  /** Symmetrize + dedup: every undirected edge present in both directions.
+  /** Symmetrize + dedup: every undirected edge present in both directions,
+    * self-loops dropped.
     *
-    * Shape (guide §2.3 — shuffle fewer bytes): canonicalize each edge to
-    * `(min, max)` FIRST and dedup that, then mirror the deduped set with a
-    * narrow projection. The dedup exchange now carries |E| canonical rows
-    * instead of the 2|E| rows the mirror-then-distinct form shuffled —
-    * half the bytes through the only exchange of the operator, with an
-    * identical output set (a directed pair and its reverse canonicalize to
-    * the same row; the mirror of a strict-u<v set cannot collide with the
-    * set itself, so no second distinct is needed). */
+    * Shape (guide §2.3 — shuffle fewer bytes): dedup the canonical
+    * `(min, max)` pairs FIRST ([[Graphs.canonical]]), then mirror the
+    * deduped set with a narrow projection. The dedup exchange carries |E|
+    * canonical rows instead of the 2|E| rows a mirror-then-distinct form
+    * shuffles, with an identical output set (the mirror of a strict u<v
+    * set cannot collide with the set itself). */
   def symmetrize(edges: DataFrame): DataFrame = {
-    val canon = edges
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-    canon.union(canon.select(col("dst").as("src"), col("src").as("dst")))
+    val canon = Graphs.canonical(edges)
+    canon.select(col("u").as("src"), col("v").as("dst"))
+      .union(canon.select(col("v").as("src"), col("u").as("dst")))
   }
 
   /** The undirected layout [[hashMin]] and [[LabelPropagation]] iterate
-    * over: `vertices (vid)` and `edges (src, dst)`, the symmetric non-loop
-    * edges plus ONE self-loop per vertex, all persisted at
-    * [[graft.GraftSession.storageLevel]].
+    * over: ONE frame `edges (src, dst)`, the symmetric non-loop edges plus
+    * ONE self-loop per vertex, in the [[Graphs.csrLayout]] CSR blocks and
+    * persisted at [[graft.GraftSession.storageLevel]].
     *
-    * ONE scan of the input feeds the whole setup: the canonical (min,max)
-    * edge rows — INCLUDING self-loop rows, so the vertex universe keeps
-    * loop-only vertices (referee-pinned r5 fix) — are deduped once and
-    * persisted; both the vertex universe and the symmetrized table derive
-    * from that cache, and the canonical dedup shuffles |E| rows instead of
-    * the 2|E| a mirror-then-distinct would (guide §2.3/§2.4). The edges end
-    * in repartition(src) + sortWithinPartitions (CSR blocks): distinct's
-    * (src,dst) hash partitioning does NOT satisfy the per-iteration join's
-    * clustering on src. The self-loops feed each vertex its own state
-    * through the same aggregate that feeds it the neighbors' (single-use
-    * state — see [[hashMin]]), at +|V| rows on 2|E|. Genuine self-edges are
-    * dropped, so `src = dst` identifies the added loops exactly. Like
-    * [[PageRank.prepare]]'s layout it is built with AQE off, so the cached
-    * edges keep their `src` partitioning and no superstep re-shuffles them. */
+    * One pass over the input emits `(s,d)`, `(d,s)`, `(s,s)` and `(d,d)`
+    * per row; the dedup runs inside the `src` exchange, so the layout costs
+    * one exchange. Every endpoint gets its loop, so loop-only vertices
+    * stay in the vertex universe, and a genuine self-edge is that loop. The
+    * loops feed each vertex its own state through the same aggregate that
+    * feeds it its neighbors' (single-use state — see [[hashMin]]), at +|V|
+    * rows on 2|E|. Like [[PageRank.prepare]]'s layout it is built with AQE
+    * off, so the cached edges keep their `src` partitioning and no
+    * superstep re-shuffles them.
+    *
+    * The vertex set and a kernel's start states are read off the loop rows
+    * by [[start]] as `(src AS vid, dst AS label)`. `dst` is no alias of
+    * `vid`, so the start state reports `hashpartitioning(vid)` alone; a
+    * `label` aliased to `vid` would report `hashpartitioning(label) or
+    * hashpartitioning(vid)`, of which a local checkpoint keeps only the
+    * first, and the first superstep would re-shuffle the state. */
   private[graph] final class Undirected(input: DataFrame) {
-    private val canon = input
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .distinct()
-      .persist(GraftSession.storageLevel)
-    val vertices: DataFrame = canon.select(col("src").as("vid"))
-      .union(canon.select(col("dst").as("vid"))).distinct()
-      .persist(GraftSession.storageLevel)
-    private val sym0 = canon.where(col("src") =!= col("dst"))
-    val edges: DataFrame = sym0
-      .union(sym0.select(col("dst").as("src"), col("src").as("dst")))
-      .union(vertices.select(col("vid").as("src"), col("vid").as("dst")))
-      .repartition(col("src"))
-      .sortWithinPartitions("src", "dst")
+    val edges: DataFrame = Graphs.csrLayout(input
+        .select(stack(lit(4), col("src"), col("dst"), col("dst"), col("src"),
+          col("src"), col("src"), col("dst"), col("dst")).as(Seq("src", "dst")))
+        .repartition(col("src"))
+        .distinct())
       .persist(GraftSession.storageLevel)
 
-    def unpersist(): Unit = { edges.unpersist(); vertices.unpersist(); canon.unpersist() }
+    /** `(vid, label)`: every vertex, labeled with its own vid. */
+    def start(label: String): DataFrame = edges.where(col("src") === col("dst"))
+      .select(col("src").as("vid"), col("dst").as(label))
+
+    def unpersist(): Unit = edges.unpersist()
   }
 
   /** Runs on the [[Supersteps]] driver (resume, `stepsPerJob` fusion,
@@ -96,8 +90,9 @@ object ConnectedComponents {
     * min` with no join-back (the join-back form references the uncached
     * state twice, which under lazy block fusion doubles the subplan per
     * chained step — exponential in the block size). One exchange per
-    * superstep: the state arrives partitioned on vid from the previous
-    * aggregate, the edge side is cached pre-partitioned on src, and only
+    * superstep: the state arrives partitioned on vid, from the first block
+    * on (the start state read off [[Undirected.start]], then each previous
+    * aggregate), the edge side is cached pre-partitioned on src, and only
     * the `groupBy(dst)` shuffles. The block-end changed-count is the
     * driver's convergence action, so it materializes the block in the same
     * job (one action per block, not two). */
@@ -121,7 +116,7 @@ object ConnectedComponents {
         max(when(col("src") === col("dst"), col("prev"))).as("prev"))
 
     try Supersteps.iterate(spark,
-        init = g.vertices.withColumn("component", col("vid")),
+        init = g.start("component"),
         step = (st, _) => superstep(st),
         maxIters = maxIters,
         checkpointTable = checkpointTable,
@@ -153,14 +148,11 @@ object ConnectedComponents {
       spark: SparkSession,
       edges: DataFrame,
       maxIters: Int = 50): DataFrame = {
-    // invariant: pairs (u, v) with v < u ("child -> smaller neighbor").
-    // Canonical (u > v) pairs directly — symmetrize-then-recanonicalize
-    // would dedup the same |E| set through a 2|E|-row exchange (guide §2.3)
-    def init: DataFrame = edges
-      .select(greatest(col("src"), col("dst")).as("u"),
-        least(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
+    // invariant: pairs (u, v) with v < u ("child -> smaller neighbor"):
+    // the canonical pairs, flipped. Symmetrize-then-recanonicalize would
+    // dedup the same |E| set through a 2|E|-row exchange (guide §2.3)
+    def init: DataFrame = Graphs.canonical(edges)
+      .select(col("v").as("u"), col("u").as("v"))
 
     def minNeighbor(e: DataFrame): DataFrame = e.groupBy("u")
       .agg(least(min(col("v")), first(col("u"))).as("m"))

@@ -48,10 +48,10 @@ object LabelPropagation {
     // at their own vid, seed rows for vids outside the graph are dropped
     // (the propagation domain is the graph)
     def init: DataFrame = Option(seedLabels)
-      .map(s => g.vertices
+      .map(s => g.start("label")
         .join(s.select(col("vid"), col("label").as("seed")), Seq("vid"), "left")
-        .select(col("vid"), coalesce(col("seed"), col("vid")).as("label")))
-      .getOrElse(g.vertices.withColumn("label", col("vid")))
+        .select(col("vid"), coalesce(col("seed"), col("label")).as("label")))
+      .getOrElse(g.start("label"))
 
     // one chained superstep: each vertex adopts its in-neighbors' modal
     // label (ties to the minimum), keeps its own when isolated — the

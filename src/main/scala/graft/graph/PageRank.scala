@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
+import graft.ingest.Graphs
 
 /** Distributed PageRank as iterative Dataset joins (north-rule kernel #1).
   *
@@ -74,9 +75,7 @@ object PageRank {
     * reuses, so it must be exactly `spark.sql.shuffle.partitions`. */
   def prepare(spark: SparkSession, edges: DataFrame): PreparedGraph =
     Supersteps.withoutAqe(spark) {
-      val e = edges.select(col("src"), col("dst"))
-        .repartition(col("src"))
-        .sortWithinPartitions("src", "dst")
+      val e = Graphs.csrLayout(edges.select(col("src"), col("dst")))
         .persist(GraftSession.storageLevel)
       val outDeg = e.groupBy(col("src").as("vid"))
         .agg(count(lit(1)).as("outDeg"))

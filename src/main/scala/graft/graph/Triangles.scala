@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
+import graft.ingest.Graphs
 
 /** Exact per-vertex triangle counts (north-rule kernel #4) via the
   * degree-ordered node-iterator: orient each undirected edge from the
@@ -30,19 +31,6 @@ import graft.GraftSession
   */
 object Triangles {
 
-  /** Undirected distinct edges as (u < v) pairs.
-    *
-    * Input contract: self-loops are ignored ENTIRELY — including for the
-    * [[perVertex]] vertex universe, which derives from this frame (a
-    * vertex whose only incident edges are self-loops does not appear;
-    * unlike CC/LP, where every endpoint is a component/label carrier, a
-    * loop-only vertex has no triangle semantics). */
-  private[graft] def canonical(edges: DataFrame): DataFrame =
-    edges.select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-
   /** Degree-ordered orientation of the canonical frame: rows
     * `(lo, hi, dlo, dhi)` where `(dlo, lo) < (dhi, hi)` lexicographically.
     * In a triangle all three oriented edges then agree with one total
@@ -68,7 +56,7 @@ object Triangles {
     * whether or not they are cached — CacheManager keys on the analyzed
     * plan, which is identical however the frame was re-derived. */
   def uncache(edges: DataFrame): Unit = {
-    val canon = canonical(edges)
+    val canon = Graphs.canonical(edges)
     orient(canon).unpersist()
     canon.unpersist()
   }
@@ -76,10 +64,14 @@ object Triangles {
   /** Per-vertex triangle counts `(vid, triangles)`; vertices in no triangle
     * get 0. Each triangle (a, b, c) is enumerated ONCE and credits its three
     * corners through one `explode`, so the plan holds one wedge self-join
-    * and one closing semi-join. ONE cached canonical frame feeds both the
-    * wedge pipeline and the vertex universe. */
+    * and one closing semi-join. ONE cached canonical frame
+    * ([[Graphs.canonical]]) feeds both the wedge pipeline and the vertex
+    * universe. Self-loops are ignored entirely, so a vertex whose only
+    * edges are self-loops does not appear: unlike CC/LP, where every
+    * endpoint carries a component or label, a loop-only vertex has no
+    * triangle semantics. */
   def perVertex(edges: DataFrame): DataFrame = {
-    val canon = canonical(edges).persist(GraftSession.storageLevel)
+    val canon = Graphs.canonical(edges).persist(GraftSession.storageLevel)
     val o = orient(canon).persist(GraftSession.storageLevel)
     def before(d1: Column, v1: Column, d2: Column, v2: Column): Column =
       d1 < d2 || (d1 === d2 && v1 < v2)

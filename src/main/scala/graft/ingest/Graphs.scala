@@ -85,17 +85,25 @@ object Graphs {
   /** CSR-blocked physical layout: HASH-partitioned by `src`, sorted
     * `(src, dst)` within partitions — every kernel's `edges ⋈ state on src`
     * then becomes a co-partitioned join with sequential access per block
-    * (SURVEY.md §4 item 2). Hash, not range: it is the exact layout
-    * [[graft.graph.PageRank.prepare]] builds, so composing
-    * buildGraph |> prepare collapses to ONE edge exchange
-    * (CollapseRepartition) instead of paying a range shuffle every kernel
-    * immediately discards — and hash(src) is what the supersteps' state
-    * joins cluster on. */
-  def csrLayout(edges: DataFrame, partitions: Int = 0): DataFrame = {
-    val p = if (partitions > 0) partitions
-            else edges.sparkSession.sessionState.conf.numShufflePartitions
-    edges.repartition(p, col("src")).sortWithinPartitions("src", "dst")
-  }
+    * (SURVEY.md §4 item 2). Hash, not range: it is the layout
+    * [[graft.graph.PageRank.prepare]] and the CC/LP undirected layout
+    * build, so composing buildGraph |> prepare collapses to ONE edge
+    * exchange (the planner drops a repartition its child already
+    * satisfies) instead of paying a range shuffle every kernel immediately
+    * discards — and hash(src) is what the supersteps' state joins cluster
+    * on. */
+  def csrLayout(edges: DataFrame): DataFrame = edges
+    .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
+    .sortWithinPartitions("src", "dst")
+
+  /** Undirected distinct edges as `(u, v)` pairs with `u < v`; self-loops
+    * are dropped. The one canonical-pair form of every undirected kernel:
+    * symmetrize, star-CC and triangle counting. */
+  def canonical(edges: DataFrame): DataFrame =
+    edges.select(least(col("src"), col("dst")).as("u"),
+        greatest(col("src"), col("dst")).as("v"))
+      .where(col("u") =!= col("v"))
+      .distinct()
 
   /** Release [[buildGraph]]'s internal caches for `pages` (the raw
     * url-level edge frame; the returned `vertices` frame is the caller's

@@ -237,8 +237,8 @@ object Dedup {
       pairs: DataFrame, maxIters: Int = 100,
       verifyClosure: Boolean = true): DataFrame = {
     // candidate generation (e.g. the whole minhash signing pipeline) is the
-    // expensive subtree here, and it feeds several consumers: the CC vertex
-    // universe, the symmetrized edge table, and the closure check. Persist
+    // expensive subtree here, and it feeds two consumers: the CC layout
+    // and the closure check. Persist
     // it once — without this each consumer re-executes the generation plan
     // (ADVICE r5: 3 re-executions measured), and at 100 TB that is 3 corpus
     // scans instead of 1. Unpersisted before return: downstream consumers

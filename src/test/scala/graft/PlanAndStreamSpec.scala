@@ -140,7 +140,7 @@ class PlanSpec extends SparkSpec {
       // degree build, orientation join, and the vertex-universe branch —
       // reads one InMemoryRelation instead of re-running the distinct
       // shuffle (round-4 defect: perVertex ran canonical() twice)
-      val canonCached = Triangles.canonical(edges).queryExecution.withCachedData
+      val canonCached = graft.ingest.Graphs.canonical(edges).queryExecution.withCachedData
       assert(canonCached.isInstanceOf[
         org.apache.spark.sql.execution.columnar.InMemoryRelation],
         s"canonical edge frame not served from cache:\n$canonCached")

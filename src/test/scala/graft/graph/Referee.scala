@@ -86,8 +86,11 @@ object Referee {
     dist.values.foldLeft(0)(math.max)
   }
 
-  /** Synchronous label propagation, ties -> min label, fixed iterations. */
-  def labelProp(edges: Seq[(Long, Long)], numIters: Int): Map[Long, Long] = {
+  /** Synchronous label propagation, ties -> min label, fixed iterations.
+    * A vertex starts at its `seeds` label, or at its own vid when it has
+    * none; seeds of vids outside the graph are ignored. */
+  def labelProp(edges: Seq[(Long, Long)], numIters: Int,
+      seeds: Map[Long, Long] = Map.empty): Map[Long, Long] = {
     val adj = mutable.Map.empty[Long, mutable.Set[Long]]
     edges.foreach { case (a, b) =>
       // endpoints always count as vertices; self-loops add no adjacency
@@ -100,7 +103,7 @@ object Referee {
       }
     }
     val vertices = adj.keys.toSeq.sorted
-    var labels = vertices.map(v => v -> v).toMap
+    var labels = vertices.map(v => v -> seeds.getOrElse(v, v)).toMap
     (0 until numIters).foreach { _ =>
       labels = vertices.map { v =>
         val counts = adj(v).toSeq.map(labels).groupBy(identity)
