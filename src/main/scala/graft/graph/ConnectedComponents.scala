@@ -53,8 +53,8 @@ object ConnectedComponents {
     * loops feed each vertex its own state through the same aggregate that
     * feeds it its neighbors' (single-use state — see [[hashMin]]), at +|V|
     * rows on 2|E|. Like [[PageRank.prepare]]'s layout it is built with AQE
-    * off, so the cached edges keep their `src` partitioning and no
-    * superstep re-shuffles them.
+    * off ([[Supersteps.withoutAqe]]), so the cached edges keep their `src`
+    * partitioning and no superstep re-shuffles them.
     *
     * The vertex set and a kernel's start states are read off the loop rows
     * by [[start]] as `(src AS vid, dst AS label)`. `dst` is no alias of
@@ -63,12 +63,14 @@ object ConnectedComponents {
     * hashpartitioning(vid)`, of which a local checkpoint keeps only the
     * first, and the first superstep would re-shuffle the state. */
   private[graph] final class Undirected(input: DataFrame) {
-    val edges: DataFrame = Graphs.csrLayout(input
-        .select(stack(lit(4), col("src"), col("dst"), col("dst"), col("src"),
-          col("src"), col("src"), col("dst"), col("dst")).as(Seq("src", "dst")))
-        .repartition(col("src"))
-        .distinct())
-      .persist(GraftSession.storageLevel)
+    val edges: DataFrame = Supersteps.withoutAqe(input.sparkSession) {
+      Graphs.csrLayout(input
+          .select(stack(lit(4), col("src"), col("dst"), col("dst"), col("src"),
+            col("src"), col("src"), col("dst"), col("dst")).as(Seq("src", "dst")))
+          .repartition(col("src"))
+          .distinct())
+        .persist(GraftSession.storageLevel)
+    }
 
     /** `(vid, label)`: every vertex, labeled with its own vid. */
     def start(label: String): DataFrame = edges.where(col("src") === col("dst"))
@@ -103,7 +105,7 @@ object ConnectedComponents {
       checkpointTable: String = null,
       checkpointEvery: Int = 1,
       stepsPerJob: Int = 1): DataFrame = {
-    val g = Supersteps.withoutAqe(spark)(new Undirected(edges))
+    val g = new Undirected(edges)
 
     // one chained superstep over (vid, component, prev): candidate = min
     // over in-neighbors ∪ self (the self-loop row); `prev` (the block-start

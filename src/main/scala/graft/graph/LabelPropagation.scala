@@ -42,7 +42,7 @@ object LabelPropagation {
       checkpointTable: String = null,
       checkpointEvery: Int = 1,
       stepsPerJob: Int = 1): DataFrame = {
-    val g = Supersteps.withoutAqe(spark)(new ConnectedComponents.Undirected(edges))
+    val g = new ConnectedComponents.Undirected(edges)
 
     // seeds are aligned to the graph's vertex set: unlabeled vertices start
     // at their own vid, seed rows for vids outside the graph are dropped

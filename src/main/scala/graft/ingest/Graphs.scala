@@ -10,8 +10,8 @@ import graft.GraftSession
   */
 object Graphs {
 
-  /** Deterministic dense vertex ids: `vid = zero-based position of url in
-    * the globally sorted distinct url set`.
+  /** Deterministic dense vertex ids for the `url` column of `urls`: `vid =
+    * zero-based position of url in the globally sorted distinct url set`.
     *
     * NOT `monotonically_increasing_id` (partitioning-dependent) and NOT a
     * single-partition `row_number` window (driver bottleneck at 10^12 urls).
@@ -20,14 +20,13 @@ object Graphs {
     * per-partition counts. The result is invariant to the number of
     * partitions because range partitioning preserves global order.
     */
-  def encodeVertices(urls: DataFrame, col0: String = "url",
-      partitions: Int = 0): DataFrame = {
+  def encodeVertices(urls: DataFrame, partitions: Int = 0): DataFrame = {
     val spark = urls.sparkSession
     import spark.implicits._
     val p = if (partitions > 0) partitions
             else spark.sessionState.conf.numShufflePartitions
     val distinctSorted = urls
-      .select(col(col0).as("url")).na.drop().distinct()
+      .select(col("url")).na.drop().distinct()
       .repartitionByRange(p, col("url"))
       .sortWithinPartitions("url")
     // zipWithIndex: ids follow partition order == global sort order here.

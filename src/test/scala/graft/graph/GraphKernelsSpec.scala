@@ -142,8 +142,7 @@ class GraphKernelsSpec extends SparkSpec {
     val input = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 3L), (4L, 4L), (5L, 3L))
     val want = input.filter(p => p._1 != p._2).flatMap(p => Seq(p, p.swap)).toSet ++
       input.flatMap(p => Seq(p._1, p._2)).map(v => (v, v))
-    val g = Supersteps.withoutAqe(spark)(
-      new ConnectedComponents.Undirected(input.toDF("src", "dst")))
+    val g = new ConnectedComponents.Undirected(input.toDF("src", "dst"))
     try {
       val rows = g.edges.as[(Long, Long)].collect()
       assert(rows.length == want.size && rows.toSet == want)

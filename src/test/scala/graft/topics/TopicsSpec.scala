@@ -1,5 +1,11 @@
 package graft.topics
 
+import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -47,26 +53,43 @@ class TopicsSpec extends SparkSpec {
     assert(m.relativeEntropy(spark) < 0.9)
   }
 
-  test("LDA unbounded-vocab path never collects vocab×K; infer matches") {
-    // ceiling 1 forces the counter-join path end-to-end: training (round-2
-    // fallback) AND the final model build + infer (no driver collect left)
-    val mb = new LDA(2, seed = 7L).train(spark, bow(4), 12, numIters = 4)
-    val mj = new LDA(2, seed = 7L, broadcastCeiling = 1L)
-      .train(spark, bow(4), 12, numIters = 4)
-    assert(mb.countersCollected && !mj.countersCollected)
-    assert(mj.wordTopic.isEmpty, "vocab×K table not collected on join path")
-    // identical hash-seeded trajectory across counter strategies
-    assert(mb.assignments.as[(Long, Int, Int, Int)].collect().toSet
-      == mj.assignments.as[(Long, Int, Int, Int)].collect().toSet)
-    // join-path infer agrees with broadcast-path infer
-    val ib = mb.infer(spark, bow(4)).as[(Long, Seq[Double])].collect().toMap
-    val ij = mj.infer(spark, bow(4)).as[(Long, Seq[Double])].collect().toMap
-    assert(ib.keySet == ij.keySet)
-    ib.foreach { case (d, p) =>
-      p.zip(ij(d)).foreach { case (x, y) => assert(math.abs(x - y) < 1e-12) }
+  /** `body`'s result and the Spark jobs it started, counted by a listener
+    * on its job group. */
+  def withJobs[T](group: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new GroupJobs
+    sc.addSparkListener(jobs)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      (out, jobs.started(sc, group))
+    } finally sc.removeSparkListener(jobs)
+  }
+
+  // vocab 8,000,001 × 1 topic: one cell over the counter ceiling
+  val overCeiling = 8000001
+
+  test("LDA above the counter ceiling fails before any Spark job") {
+    val (e, jobs) = withJobs("lda_ceiling")(intercept[IllegalArgumentException] {
+      new LDA(1, seed = 7L).train(spark, bow(4), overCeiling, numIters = 1)
+    })
+    assert(jobs == 0)
+    assert(e.getMessage.contains("reduce vocab or topics"), e.getMessage)
+  }
+
+  test("LDA and GSDMM run one counter job per Gibbs superstep") {
+    // a superstep is its counter collect plus the driver's checkpoint of the
+    // resampled state: 3 supersteps run the start-state checkpoint, 3 × 2
+    // jobs, and the final counters' collect (2 jobs under the session's
+    // AQE, which runs the map stage as a job of its own)
+    val kernels: Seq[(String, Int => Any)] = Seq(
+      "lda" -> (n => new LDA(2, seed = 7L).train(spark, bow(4), 12, numIters = n)),
+      "gsdmm" -> (n => new GSDMM(2, seed = 7L).train(spark, bow(4), 12, numIters = n)))
+    for ((name, train) <- kernels) {
+      val jobs = Seq(1, 3).map(n => withJobs(s"${name}_$n")(train(n))._2)
+      assert(jobs(1) - jobs(0) == 2 * 2, s"$name: jobs of 1 and 3 supersteps $jobs")
+      assert(jobs(1) == 1 + 3 * 2 + 2, s"$name: ${jobs(1)} jobs in 3 supersteps")
     }
-    // entropy path is collect-free in both models
-    assert(math.abs(mb.entropy(spark) - mj.entropy(spark)) < 1e-12)
   }
 
   test("GSDMM is deterministic across partitionings") {
@@ -120,30 +143,12 @@ class TopicsSpec extends SparkSpec {
     assert(math.abs(m.relativeEntropy(spark) - entropy / math.log(k)) < 1e-9)
   }
 
-  test("GSDMM unbounded-vocab join path matches the broadcast path exactly") {
-    // broadcastCeiling = 1 forces the word-keyed counter-join path (the
-    // K×V table never collected); both paths must walk the identical
-    // hash-seeded Gibbs trajectory — bit-equal probabilities, same topics
-    val mb = new GSDMM(2, seed = 7L).train(spark, bow(4), 12, numIters = 4)
-    val mj = new GSDMM(2, seed = 7L, broadcastCeiling = 1L)
-      .train(spark, bow(4), 12, numIters = 4)
-    assert(mb.countersCollected && !mj.countersCollected)
-    assert(mj.topicWordCount.isEmpty, "K×V table not collected on join path")
-    assert(mb.assignments.as[(Long, Int)].collect().toMap
-      == mj.assignments.as[(Long, Int)].collect().toMap)
-    // K-sized counters agree
-    assert(mb.topicDocCount.toSeq == mj.topicDocCount.toSeq)
-    assert(mb.topicWordSum.toSeq == mj.topicWordSum.toSeq)
-    // distributed entropy and memberships agree across counter strategies
-    assert(math.abs(mb.entropy(spark) - mj.entropy(spark)) < 1e-12)
-    val membB = mb.inferMemberships(spark).as[(Long, Seq[Double])].collect().toMap
-    val membJ = mj.inferMemberships(spark).as[(Long, Seq[Double])].collect().toMap
-    assert(membB.keySet == membJ.keySet)
-    membB.foreach { case (d, p) =>
-      p.zip(membJ(d)).foreach { case (x, y) => assert(math.abs(x - y) < 1e-12) }
-    }
-    // driver-side single-doc infer is fail-loud on the unbounded-vocab path
-    intercept[IllegalArgumentException] { mj.infer(Seq((0, 1))) }
+  test("GSDMM above the counter ceiling fails before any Spark job") {
+    val (e, jobs) = withJobs("gsdmm_ceiling")(intercept[IllegalArgumentException] {
+      new GSDMM(1, seed = 7L).train(spark, bow(4), overCeiling, numIters = 1)
+    })
+    assert(jobs == 0)
+    assert(e.getMessage.contains("reduce vocab or topics"), e.getMessage)
   }
 
   test("GSDMM entropy of an empty docs table is 0, not NPE") {
@@ -202,5 +207,34 @@ class TopicsSpec extends SparkSpec {
     assert(got == want)
     assert(resumed.wordTopic == full.wordTopic)
     assert(TableIO.history(t).map(_.step) == Seq(0L, 1L, 2L, 3L))
+  }
+}
+
+/** Spark jobs started per job group. */
+final class GroupJobs extends SparkListener {
+  private val jobs = mutable.Map.empty[String, Int].withDefaultValue(0)
+  private val ended = mutable.Set.empty[Int]
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      .foreach(jobs(_) += 1)
+  }
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+    ended += e.jobId
+  }
+
+  /** The group's job count, read once the end of a marker job run after
+    * it was delivered: the bus delivers every earlier event before it. */
+  def started(sc: SparkContext, group: String): Int = {
+    val marker = sc.parallelize(Seq(1), 1).countAsync()
+    Await.result(marker, Duration.Inf)
+    val id = marker.jobIds.head
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (!synchronized(ended(id)) && System.nanoTime() < deadline) Thread.sleep(20)
+    synchronized {
+      assert(ended(id), "the marker job's end was not delivered")
+      jobs(group)
+    }
   }
 }
