@@ -43,7 +43,7 @@ object Bench {
     // line moved the other way — a protocol that penalizes an optimization
     // for its own one-time codegen is broken evidence (VERDICT r4 #1).
     // spark.catalog.clearCache() before EVERY execution drops leftover
-    // CacheManager entries (e.g. triangles' cached canonical frame), so
+    // CacheManager entries (e.g. g_pagerank_salted's cached edge frame), so
     // both executions start cache-cold and steady never silently reads a
     // prior run's materialized state.
     // steady = best of SPARK_GRAFT_STEADY_REPS (default 2) cache-cleared

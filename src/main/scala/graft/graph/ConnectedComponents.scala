@@ -42,9 +42,10 @@ object ConnectedComponents {
   }
 
   /** The undirected layout [[hashMin]] and [[LabelPropagation]] iterate
-    * over: ONE frame `edges (src, dst)`, the symmetric non-loop edges plus
-    * ONE self-loop per vertex, in the [[Graphs.csrLayout]] CSR blocks and
-    * persisted at [[graft.GraftSession.storageLevel]].
+    * over and [[Triangles]] orients: ONE frame `edges (src, dst)`, the
+    * symmetric non-loop edges plus ONE self-loop per vertex, in the
+    * [[Graphs.csrLayout]] CSR blocks and persisted at
+    * [[graft.GraftSession.storageLevel]].
     *
     * One pass over the input emits `(s,d)`, `(d,s)`, `(s,s)` and `(d,d)`
     * per row; the dedup runs inside the `src` exchange, so the layout costs

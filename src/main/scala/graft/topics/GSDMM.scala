@@ -171,7 +171,7 @@ class GSDMM(
 
     val state = graft.graph.Supersteps.iterate(spark, init, resample, numIters,
       checkpointTable, checkpointEvery).state
-    val (tdc, twc, tws) = counters(typed(state))
+    val (tdc, twc, tws) = graft.graph.Supersteps.withoutAqe(spark)(counters(typed(state)))
     GSDMMModel(this, state, tdc, twc, tws, tdc.sum, numWords)
   }
 }

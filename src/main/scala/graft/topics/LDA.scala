@@ -131,7 +131,8 @@ class LDA(
 
     val state = graft.graph.Supersteps.iterate(spark, init, resample, numIters,
       checkpointTable, checkpointEvery).state
-    val (wordTopic, topicSum) = counters(typed(state))
+    val (wordTopic, topicSum) =
+      graft.graph.Supersteps.withoutAqe(spark)(counters(typed(state)))
     LDAModel(this, state, wordTopic, topicSum, numWords)
   }
 }

@@ -129,28 +129,27 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("triangles perVertex reuses ONE cached canonical edge frame") {
+  test("triangles perVertex leaves nothing persisted but the checkpoint it returns") {
     import graft.graph.Triangles
-    val pages = Pages.synthesize(spark, 1000, 7L, 4)
-    val (_, edges) = graft.ingest.Graphs.buildGraph(pages)
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    // cached plans, by CacheManager.numCachedEntries: Scala-private to
+    // Spark, public in the bytecode
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cachedPlans: Any = cache.getClass.getMethod("numCachedEntries").invoke(cache)
+    val edges = graft.graph.Referee.zipf(500, 2000, 42L).toDF("src", "dst")
+    val rdds = sc.getPersistentRDDs.keySet
+    val plans = cachedPlans
+    val pv = Triangles.perVertex(edges)
+    val returned = pv.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd
+      case other => fail(s"perVertex returned an unmaterialized plan:\n$other")
+    }
     try {
-      val pv = Triangles.perVertex(edges)
-      pv.count() // fill the caches
-      // the canonical (distinct u<v) frame is cached, so every consumer —
-      // degree build, orientation join, and the vertex-universe branch —
-      // reads one InMemoryRelation instead of re-running the distinct
-      // shuffle (round-4 defect: perVertex ran canonical() twice)
-      val canonCached = graft.ingest.Graphs.canonical(edges).queryExecution.withCachedData
-      assert(canonCached.isInstanceOf[
-        org.apache.spark.sql.execution.columnar.InMemoryRelation],
-        s"canonical edge frame not served from cache:\n$canonCached")
-      // and the final plan's live region (above the cache-build subtrees)
-      // reads the cache
-      val plan = pv.queryExecution.executedPlan.toString
-      val live = plan.linesIterator
-        .takeWhile(!_.contains("InMemoryRelation")).toSeq
-      assert(live.exists(_.contains("InMemoryTableScan")), plan.take(2000))
-    } finally spark.catalog.clearCache()
+      assert(sc.getPersistentRDDs.keySet -- rdds == Set(returned.id))
+      assert(cachedPlans == plans)
+    } finally org.apache.spark.GraftCoreBridge.release(returned)
   }
 
   test("perVertex enumerates each triangle once") {
@@ -159,14 +158,38 @@ class PlanSpec extends SparkSpec {
     // union of one branch per corner re-runs the wedge join and the closing
     // semi-join three times
     import graft.graph.Triangles
-    val edges = graft.graph.Referee.zipf(500, 2000, 42L).toDF("src", "dst")
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    // perVertex returns a checkpoint: capture the plan its checkpoint runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     try {
-      // the plan before execution: an executed adaptive plan prints its
-      // final and initial forms both
-      val plan = Triangles.perVertex(edges).queryExecution.executedPlan.toString
-      val semis = plan.linesIterator.count(_.contains("LeftSemi"))
+      Triangles.perVertex(graft.graph.Referee.zipf(500, 2000, 42L).toDF("src", "dst"))
+      eventually(timeout(30.seconds)) { assert(plans.size == 1) }
+      val plan = plans.peek()
+      val semis = plan.toString.linesIterator.count(_.contains("LeftSemi"))
       assert(semis == 1, s"expected one closing semi-join, got $semis:\n$plan")
-    } finally Triangles.uncache(edges)
+      // the degree count reads the src-partitioned layout without an exchange
+      val degrees = plan.collect {
+        case a: HashAggregateExec
+            if a.groupingExpressions.map(_.references.map(_.name).toSeq) == Seq(Seq("src")) &&
+              a.exists(_.isInstanceOf[InMemoryTableScanExec]) => a
+      }
+      assert(degrees.nonEmpty, plan.toString)
+      degrees.foreach { a =>
+        assert(!a.exists(_.isInstanceOf[ShuffleExchangeExec]), s"degree count shuffles:\n$a")
+      }
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("dedup self-joins read ONE shuffled subplan via exchange reuse") {

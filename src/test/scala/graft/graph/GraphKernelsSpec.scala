@@ -186,7 +186,6 @@ class GraphKernelsSpec extends SparkSpec {
     assert(comps == 1L)
     // 2 * C(5,3) = 20 triangles, each credited to its three corners
     val corners = Triangles.perVertex(e).agg(sum($"triangles")).as[Long].head()
-    Triangles.uncache(e)
     assert(corners / 3 == 20L && corners % 3 == 0L, s"corner credits $corners")
   }
 
@@ -429,9 +428,9 @@ class GraphKernelsSpec extends SparkSpec {
       assert(ranks.count() == g.n)
       assert(Triangles.perVertex(edges).where(col("triangles") > 0).count() > 0)
       // alive: buildGraph's caches, the layout, the returned ranks'
-      // checkpoint, the triangle caches
+      // checkpoint, the returned triangle counts' checkpoint
       val alive = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      assert(alive.size >= 7, s"persistent RDDs: $alive")
+      assert(alive.size >= 6, s"persistent RDDs: $alive")
       alive.foreach { case (id, rdd) =>
         assert(!rdd.getStorageLevel.deserialized, s"RDD $id at ${rdd.getStorageLevel}")
       }
@@ -450,7 +449,6 @@ class GraphKernelsSpec extends SparkSpec {
       }
     } finally {
       sc.removeSparkListener(listener)
-      Triangles.uncache(edges)
       g.unpersist()
       vertices.unpersist()
       Graphs.releaseBuild(pages)

@@ -80,15 +80,14 @@ class TopicsSpec extends SparkSpec {
   test("LDA and GSDMM run one counter job per Gibbs superstep") {
     // a superstep is its counter collect plus the driver's checkpoint of the
     // resampled state: 3 supersteps run the start-state checkpoint, 3 × 2
-    // jobs, and the final counters' collect (2 jobs under the session's
-    // AQE, which runs the map stage as a job of its own)
+    // jobs, and the final counters' collect
     val kernels: Seq[(String, Int => Any)] = Seq(
       "lda" -> (n => new LDA(2, seed = 7L).train(spark, bow(4), 12, numIters = n)),
       "gsdmm" -> (n => new GSDMM(2, seed = 7L).train(spark, bow(4), 12, numIters = n)))
     for ((name, train) <- kernels) {
       val jobs = Seq(1, 3).map(n => withJobs(s"${name}_$n")(train(n))._2)
       assert(jobs(1) - jobs(0) == 2 * 2, s"$name: jobs of 1 and 3 supersteps $jobs")
-      assert(jobs(1) == 1 + 3 * 2 + 2, s"$name: ${jobs(1)} jobs in 3 supersteps")
+      assert(jobs(1) == 1 + 3 * 2 + 1, s"$name: ${jobs(1)} jobs in 3 supersteps")
     }
   }
 
